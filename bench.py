@@ -323,6 +323,7 @@ def main() -> None:
     load = cal / CAL_REF_SEC
     shuf = round((shuf_before + shuf_after) / 2, 3)
     shuf_load = shuf / SHUF_REF_SEC
+    cpus = spark.sparkContext.defaultParallelism
     detail = {
         "metric": "headline_queries_total",
         "value": total,
@@ -350,6 +351,7 @@ def main() -> None:
             streaming_sec / shuf_load, 3),
         "spreads": spreads,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": cpus,
     }
     here = os.path.dirname(os.path.abspath(__file__))
     sidecar = os.path.join(here, "BENCH_DETAIL.json")
@@ -358,8 +360,7 @@ def main() -> None:
     # ALSO write a per-core-count sidecar (VERDICT r12 #3): the driver
     # runs the bench at two core counts and the second run used to
     # clobber the first run's spreads, destroying the scaling/noise
-    # evidence. Additive only — the JSON stdout contract is unchanged.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # evidence. The count is the live session's, never an env default.
     with open(os.path.join(here, f"BENCH_DETAIL_c{cpus}.json"),
               "w") as fh:
         json.dump(detail, fh, indent=1)

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..functions.text import hash60, sql_hash60
+from ..functions.text import hash60
 
 # ------------------------------------------------------------------ Z-order
 
@@ -136,12 +136,6 @@ def _bloom_positions(key: Column) -> Column:
     return F.array(*[
         F.pmod(hash60(key, f"bloom{i}"), F.lit(BLOOM_BITS))
         for i in range(BLOOM_HASHES)])
-
-
-def sql_bloom_positions(expr: str) -> list[str]:
-    return [f"(({sql_hash60(expr, f'bloom{i}')}) % {BLOOM_BITS} "
-            f"+ {BLOOM_BITS}) % {BLOOM_BITS}"
-            for i in range(BLOOM_HASHES)]
 
 
 def bloom_build(build: DataFrame, key: Column) -> DataFrame:

@@ -19,12 +19,13 @@ equivalent for batch analytics.
 
 Plain ``spark.read.parquet`` cannot carry bucket metadata — bucketed
 tables must live in the session catalog (saveAsTable), so this sink
-manages warehouse-backed tables rather than bare paths.
+manages warehouse-backed tables rather than bare paths; read one back
+with ``spark.table(name)``, which carries the bucket spec.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(df: DataFrame, table: str, *, buckets: int,
@@ -39,9 +40,3 @@ def write_bucketed(df: DataFrame, table: str, *, buckets: int,
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.mode(mode).saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read back a bucketed table WITH its bucket spec (the catalog
-    carries it; a path-based parquet read would not)."""
-    return spark.table(table)

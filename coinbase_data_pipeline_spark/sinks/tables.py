@@ -51,8 +51,7 @@ def read_table(spark: SparkSession, root: str, table: str) -> DataFrame:
 
 
 def merge_upsert(spark: SparkSession, df: DataFrame, root: str,
-                 table: str, *, seq_col: str | None = None,
-                 current: DataFrame | None = None,
+                 table: str, *, current: DataFrame | None = None,
                  commit_marks: list[str] | None = None,
                  unique_keys: bool = False) -> None:
     """Cassandra-style upsert: new rows replace existing rows with the
@@ -60,9 +59,7 @@ def merge_upsert(spark: SparkSession, df: DataFrame, root: str,
 
     Duplicate primary keys WITHIN one incoming batch: Cassandra's
     last-write-wins needs a write order, which a distributed frame
-    does not carry implicitly — pass `seq_col` (an ingest
-    sequence/offset column) to break ties deterministically toward
-    the highest value; without it, intra-batch duplicates resolve
+    does not carry implicitly, so intra-batch duplicates resolve
     arbitrarily (documented contract).
 
     `current`: pass the stored table if the caller already read it
@@ -76,7 +73,7 @@ def merge_upsert(spark: SparkSession, df: DataFrame, root: str,
     of a row_number window over the full union — no per-key sort, and
     the stored side never shuffles. Semantics are identical for
     key-unique input; intra-batch duplicates would BOTH survive, so
-    the flag must not be combined with seq_col or non-unique input.
+    the flag must not be combined with non-unique input.
 
     `commit_marks`: names to record under the table's `_applied/`
     metadata dir IN THE SAME directory swap that publishes the data —
@@ -86,9 +83,6 @@ def merge_upsert(spark: SparkSession, df: DataFrame, root: str,
     re-delivered batch id can never double-merge. Existing marks are
     carried forward into every new staging dir. Spark ignores the
     underscore-prefixed dir when reading the table."""
-    if unique_keys and seq_col is not None:
-        raise ValueError("unique_keys declares no intra-batch "
-                         "duplicates; seq_col is for resolving them")
     keys = list(TABLE_KEYS[table])
     path = _path(root, table)
     if unique_keys:
@@ -106,21 +100,10 @@ def merge_upsert(spark: SparkSession, df: DataFrame, root: str,
             if current is None:
                 current = spark.read.parquet(path)
             current = current.withColumn("_pri", F.lit(0))
-            # the ingest-sequence column may be new to the stored
-            # table — backfill it as NULL (sorts last) so the union
-            # stays STRICT: any other schema drift must fail loudly,
-            # not merge as NULLs
-            if seq_col is not None and seq_col not in current.columns:
-                current = current.withColumn(
-                    seq_col,
-                    F.lit(None).cast(new.schema[seq_col].dataType))
             combined = current.unionByName(new)
         else:
             combined = new
-        order = [F.col("_pri").desc()]
-        if seq_col is not None:
-            order.append(F.col(seq_col).desc_nulls_last())
-        w = Window.partitionBy(*keys).orderBy(*order)
+        w = Window.partitionBy(*keys).orderBy(F.col("_pri").desc())
         merged = (combined.withColumn("_rn", F.row_number().over(w))
                   .filter(F.col("_rn") == 1).drop("_rn", "_pri"))
 

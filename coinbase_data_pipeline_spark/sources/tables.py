@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType
 
+from .. import memo
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -38,32 +40,20 @@ def ensure_runtime_conf(spark: SparkSession) -> None:
         pass  # conf locked down → session.py defaults already apply
 
 
-# Inferred parquet schemas, per (application, path) — the metadata a
-# catalog/metastore would hold. A bare `spark.read.parquet(path)`
-# re-reads the footer to infer the schema on EVERY call (~150 ms
-# warm, measured r13); a catalog query builder calls load_table 1-4
-# times, so schema inference alone was a large slice of the
-# per-query fixed cost (guide §6: listing/footer work is driver-side
-# planning overhead). Metadata only — never rows; a different path
-# (new sf dir, probe dir) misses and re-infers.
-_SCHEMA_CACHE: dict[tuple[str, str], "object"] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table. Plain parquet scan → Catalyst gets full pushdown."""
+    """Scan one table. Plain parquet scan → Catalyst gets full pushdown.
+
+    The inferred schema is memoized per table file (memo.py): a bare
+    `spark.read.parquet(path)` re-reads the footer to infer it on every
+    call (~150 ms warm, measured r13), and a catalog builder calls
+    load_table 1-4 times. A rewrite at the same path re-infers."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_runtime_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (spark.sparkContext.applicationId, path)
-    cached = _SCHEMA_CACHE.get(key)
-    if cached is not None:
-        df = spark.read.schema(cached).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if len(_SCHEMA_CACHE) > 256:
-            _SCHEMA_CACHE.clear()
-        _SCHEMA_CACHE[key] = df.schema
+    schema = memo.cached(("schema", path), [path],
+                         lambda: spark.read.parquet(path).schema)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         # TIMESTAMP(NANOS) read as long (nanosAsLong): integer-divide to
         # microseconds — lossless for this data and bit-identical to
@@ -79,9 +69,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() can be used."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

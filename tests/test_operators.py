@@ -2396,14 +2396,15 @@ def test_real_model_checkpoint_seam(spark, tmp_path):
             sys.modules.pop("torch", None)
 
 
-def test_source_fingerprint_memo(tmp_path, monkeypatch):
-    """The replay-cache fingerprint memoizes the recursive walk behind
-    a top-level scandir signature (ADVICE r09): an unchanged dir must
-    not re-walk; any top-level write — a regenerated table file OR new
-    part files under a table dir (which bump the dir's mtime) — must
-    recompute, because a stale fingerprint means a silent stale replay
-    (the ADVICE r08 bug class)."""
-    import coinbase_data_pipeline_spark.plans.catalog_stream as cs
+def test_source_fingerprint_memo(tmp_path):
+    """The memo's source fingerprint is a direct walk over every data
+    file: a regenerated table file, a new part file under a table dir,
+    and an in-place rewrite deep inside a Hive-partitioned table
+    (table.parquet/date=X/part, which a top-level-plus-one-level
+    signature missed) must each change it, because a stale fingerprint
+    means a silent stale replay (the ADVICE r08 bug class). Hidden
+    files (_SUCCESS, .crc) are not data."""
+    from coinbase_data_pipeline_spark import memo
 
     d = tmp_path / "sf"
     d.mkdir()
@@ -2411,25 +2412,112 @@ def test_source_fingerprint_memo(tmp_path, monkeypatch):
     sub = d / "documents.parquet"
     sub.mkdir()
     (sub / "part-0001.parquet").write_bytes(b"p1")
+    (sub / "_SUCCESS").write_bytes(b"")
+    (sub / ".part-0001.parquet.crc").write_bytes(b"c")
 
-    walks = []
-    real_walk = cs.os.walk
-    monkeypatch.setattr(cs.os, "walk",
-                        lambda p: walks.append(p) or real_walk(p))
-    fp1 = cs._source_fingerprint(str(d))
-    fp2 = cs._source_fingerprint(str(d))
-    assert fp2 == fp1 and len(walks) == 1      # memo hit, no re-walk
+    fp1 = memo.fingerprint([str(d)])
+    assert memo.fingerprint([str(d)]) == fp1
+    assert [os.path.basename(p[0]) for p in fp1] == [
+        "part-0001.parquet", "events.parquet"]
 
     # top-level file regenerated (the fuzz-harness shape)
     os.utime(d / "events.parquet", ns=(1, 2_000_000_000))
-    fp3 = cs._source_fingerprint(str(d))
-    assert len(walks) == 2 and fp3 != fp1
+    fp2 = memo.fingerprint([str(d)])
+    assert fp2 != fp1
 
-    # a NEW part file under a table dir bumps the dir mtime -> rewalk
+    # a NEW part file under a table dir
     (sub / "part-0002.parquet").write_bytes(b"p2")
-    fp4 = cs._source_fingerprint(str(d))
-    assert len(walks) == 3 and fp4 != fp3
-    assert any(p[0].endswith("part-0002.parquet") for p in fp4)
+    fp3 = memo.fingerprint([str(d)])
+    assert fp3 != fp2
+    assert any(p[0].endswith("part-0002.parquet") for p in fp3)
+
+    # in-place rewrite at depth 3: no directory entry changes
+    part = d / "candles.parquet" / "date=2024-01-01" / "part-0000.parquet"
+    part.parent.mkdir(parents=True)
+    part.write_bytes(b"day1")
+    fp4 = memo.fingerprint([str(d)])
+    part.write_bytes(b"day1-rewritten")
+    assert memo.fingerprint([str(d)]) != fp4
+    # a single file path fingerprints that file alone
+    assert memo.fingerprint([str(part)]) == (
+        (str(part), len(b"day1-rewritten"), part.stat().st_mtime_ns),)
+
+
+def test_memo_concurrent_misses_orphan_nothing(spark, tmp_path,
+                                              monkeypatch):
+    """Threads missing on overlapping keys under a CAPACITY small
+    enough to evict beneath them: every dir a compute built is either
+    held by the memo or released — a lost update (two stores of one
+    key, an eviction racing a hit) would leave an orphan dir on disk
+    or raise inside a thread."""
+    import shutil
+    import sys
+    import threading
+    import time
+    import uuid
+
+    from coinbase_data_pipeline_spark import memo
+
+    monkeypatch.setattr(memo, "CAPACITY", 3)
+    memo.clear()
+    errors = []
+
+    def make():
+        d = tmp_path / uuid.uuid4().hex
+        d.mkdir()
+        time.sleep(0.001)          # widen the compute/store window
+        return str(d)
+
+    def worker(w):
+        try:
+            for i in range(40):
+                d = memo.cached(("stress", (w + i) % 5), [], make,
+                                lambda d: shutil.rmtree(d))
+                assert isinstance(d, str)
+        except Exception as e:     # surfaced by the assert below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,))
+                   for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    assert errors == []
+    assert len(os.listdir(tmp_path)) == memo.size() <= 3
+    memo.clear()
+    assert os.listdir(tmp_path) == []
+
+
+def test_load_table_rereads_schema_after_same_path_rewrite(spark, tmp_path):
+    """load_table memoizes the inferred parquet schema; a table
+    rewritten at the same path with a renamed column must come back
+    with the NEW columns and values — a path-keyed schema would read
+    the new file with the old column list and return the renamed
+    column as NULLs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from coinbase_data_pipeline_spark.sources.tables import load_table
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    path = str(d / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1],
+                             "r_name": ["AFRICA", "ASIA"]}), path)
+    assert load_table(spark, str(d), "region").columns == [
+        "r_regionkey", "r_name"]
+    pq.write_table(pa.table({"r_regionkey": [0, 1],
+                             "r_region_label": ["AFRICA", "ASIA"]}), path)
+    df = load_table(spark, str(d), "region")
+    assert df.columns == ["r_regionkey", "r_region_label"]
+    assert sorted(map(tuple, df.collect())) == [(0, "AFRICA"), (1, "ASIA")]
 
 
 def test_curriculum_augment_warp_matches_numpy(spark):
@@ -2820,6 +2908,23 @@ def test_ngram_jaccard_prefix_candidates_content_keyed(spark):
     assert ngram_jaccard_pairs(df).count() == 0
 
 
+def _hint_with_job_count(spark, docs):
+    """(_corpus_join_hint(docs, "text"), Spark jobs it ran)."""
+    import uuid
+
+    from coinbase_data_pipeline_spark.operators.dedup import (
+        _corpus_join_hint)
+
+    sc = spark.sparkContext
+    group = f"hint-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        hint = _corpus_join_hint(docs, "text")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return hint, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_corpus_join_hint_is_size_adaptive(spark, monkeypatch):
     """The r12 broadcast guard for the prefix-filter operators decides
     the join strategy from MEASURED corpus text bytes, not estimates:
@@ -2828,6 +2933,7 @@ def test_corpus_join_hint_is_size_adaptive(spark, monkeypatch):
     (the static planner under-sizes exploded gram relations by ~50x
     and a statically planned broadcast OOMs the driver at 500k docs —
     AQE cannot demote it). Both modes must be output-identical."""
+    from coinbase_data_pipeline_spark import memo
     from coinbase_data_pipeline_spark.operators import dedup as dd
     from coinbase_data_pipeline_spark.operators.dedup import (
         _corpus_join_hint, containment_pairs, ngram_jaccard_pairs)
@@ -2851,14 +2957,15 @@ def test_corpus_join_hint_is_size_adaptive(spark, monkeypatch):
     assert dd._size_to_bytes("8g") == 8 * 1024**3
     assert dd._size_to_bytes("-1") == -1
 
-    # tiny corpus: measured bytes under the threshold -> no hint
-    assert _corpus_join_hint(df, "text") is None
-    # r13: the probe is single-shot per (app, plan, col, budget) — a
-    # second build over the same lineage replays the memoized hint
-    # (a planner statistic, never rows) without re-scanning
-    key = (spark.sparkContext.applicationId, df.semanticHash(),
-           "text", dd._broadcast_safe_text_bytes(spark))
-    assert dd._HINT_CACHE.get(key, "miss") is None
+    # tiny corpus: measured bytes under the threshold -> no hint.
+    # The probe is single-shot per (plan, col, budget, input files): a
+    # second build over the same lineage replays the memoized hint (a
+    # planner statistic, never rows) without running a Spark job
+    hint, jobs = _hint_with_job_count(spark, df)
+    assert hint is None and jobs > 0
+    n = memo.size()
+    assert _hint_with_job_count(spark, df) == (None, 0)
+    assert memo.size() == n
     # beyond the measured threshold -> shuffle_hash, regardless of
     # what the static planner would estimate (budget is part of the
     # memo key, so the override re-decides rather than replaying)
@@ -2878,3 +2985,33 @@ def test_corpus_join_hint_is_size_adaptive(spark, monkeypatch):
         rows_bcast = sorted(map(tuple, fn(df).collect()))
         monkeypatch.setattr(dd, "BROADCAST_SAFE_TEXT_BYTES", 0)
         assert rows_guarded == rows_bcast and rows_guarded
+
+
+def test_corpus_join_hint_reprobes_rewritten_corpus(spark, tmp_path):
+    """A corpus rewritten at the same path from 10 short docs to 20 MB
+    of text must re-probe and take shuffle_hash: a hint keyed on the
+    plan alone (same path, same schema, same semantic hash) replays
+    the small corpus's "no hint" — the broadcast that OOMs the driver
+    at scale, which is what the guard exists to prevent."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from coinbase_data_pipeline_spark.operators import dedup as dd
+    from coinbase_data_pipeline_spark.sources.tables import load_table
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    path = str(d / "documents.parquet")
+    pq.write_table(pa.table({"doc_id": list(range(10)),
+                             "text": [f"doc {i}" for i in range(10)]}),
+                   path)
+    docs = load_table(spark, str(d), "documents")
+    assert _hint_with_job_count(spark, docs)[0] is None
+
+    mb = 1 << 20
+    assert 20 * mb > dd._broadcast_safe_text_bytes(spark)
+    pq.write_table(pa.table({"doc_id": list(range(20)),
+                             "text": ["x" * mb] * 20}), path)
+    docs = load_table(spark, str(d), "documents")
+    hint, jobs = _hint_with_job_count(spark, docs)
+    assert hint == "shuffle_hash" and jobs > 0

@@ -238,7 +238,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
 
 
-def test_bucketed_join_elides_shuffle(spark, tmp_path):
+def test_bucketed_join_elides_shuffle(spark):
     """Two tables bucketed the same way on the join key must
     sort-merge join with ZERO Exchange operators — the storage-layout
     contract (sinks/bucketed.py) that makes the recurring per-key
@@ -253,14 +253,12 @@ def test_bucketed_join_elides_shuffle(spark, tmp_path):
     left = c.select("product_id", "bucket_start", "close")
     right = (c.groupBy("product_id")
              .agg(F.avg("close").alias("mean_close")))
-    for name, df in (("bkt_candles", left), ("bkt_stats", right)):
-        (df.write.format("parquet").bucketBy(8, "product_id")
-         .sortBy("product_id")
-         .option("path", str(tmp_path / name))
-         .mode("overwrite").saveAsTable(name))
     try:
-        lt = B.read_bucketed(spark, "bkt_candles")
-        rt = B.read_bucketed(spark, "bkt_stats")
+        for name, df in (("bkt_candles", left), ("bkt_stats", right)):
+            B.write_bucketed(df, name, buckets=8, bucket_col="product_id",
+                             sort_cols=("product_id",))
+        lt = spark.table("bkt_candles")
+        rt = spark.table("bkt_stats")
         joined = lt.hint("merge").join(rt, "product_id")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan

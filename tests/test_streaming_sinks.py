@@ -1060,16 +1060,16 @@ def test_streaming_model_score_split_invariant(spark):
 
 def test_static_model_cache_train_once_and_invalidate(spark, tmp_path,
                                                       monkeypatch):
-    """The streaming classifier's train-once weight cache must (a)
+    """The streaming classifier's memoized weights (memo.py) must (a)
     train exactly once for repeated serve runs on unchanged tables,
     and (b) RETRAIN when the tables under the same path are
     regenerated — a stale hit would silently serve another corpus's
     weights (the ADVICE r08 stale-replay bug class, now for model
-    state). Also integration-tests the _source_fingerprint memo:
-    the regeneration is a top-level file touch."""
-    import os
+    state). The regeneration is a top-level file touch, which changes
+    the memo's source fingerprint of the sf dir."""
     import shutil
 
+    from coinbase_data_pipeline_spark import memo
     import coinbase_data_pipeline_spark.operators.textstats as TS
     import coinbase_data_pipeline_spark.plans.catalog_stream as CS
 
@@ -1093,13 +1093,53 @@ def test_static_model_cache_train_once_and_invalidate(spark, tmp_path,
 
     r1 = run()
     assert calls == [1] and r1
-    r2 = run()                       # unchanged tables: cache hit
-    assert calls == [1] and r2 == r1
+    fp = memo.fingerprint([str(d)])
+    n = memo.size()
+    r2 = run()                       # unchanged tables: memo hit
+    assert calls == [1] and r2 == r1 and memo.size() == n
     # regenerate in place (same bytes, new mtime): must retrain —
     # same corpus, so the weights and scores come back identical
-    os.utime(d / "documents.parquet")
+    st = os.stat(d / "documents.parquet")
+    os.utime(d / "documents.parquet",
+             ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert memo.fingerprint([str(d)]) != fp
     r3 = run()
     assert calls == [1, 1] and r3 == r1
+
+
+def test_memo_and_replay_dirs_stay_bounded(spark, monkeypatch):
+    """A long-lived session stays bounded: repeating the streaming and
+    dedup queries must leave the memo size and the replay dirs on disk
+    flat, and a replay dir evicted from the LRU memo must be deleted
+    from disk (the memo holds the only reference to it)."""
+    from coinbase_data_pipeline_spark import memo
+    from coinbase_data_pipeline_spark.plans.catalog_stream import _TMP_ROOT
+    from coinbase_data_pipeline_spark.plans.registry import ALL_QUERIES
+
+    def state():
+        dirs = set(os.listdir(_TMP_ROOT)) if os.path.isdir(_TMP_ROOT) \
+            else set()
+        return memo.size(), dirs
+
+    memo.clear()               # releases every dir the memo owns
+    before = state()[1]
+    after = []
+    for _ in range(3):
+        for name in ("streaming_late_candles", "dedup_ngram_jaccard"):
+            assert ALL_QUERIES[name](spark, SF).count() > 0
+        after.append(state())
+    assert after[1] == after[2]
+    late = [os.path.join(_TMP_ROOT, d) for d in after[2][1] - before
+            if d.startswith("late-")]
+    assert len(late) == 1 and os.path.isdir(late[0])
+
+    # a small memo: the replay at another scale evicts the sf0.001
+    # entries, and with them the old replay dir
+    monkeypatch.setattr(memo, "CAPACITY", 2)
+    assert ALL_QUERIES["streaming_late_candles"](
+        spark, "/root/testdata/sf0.01").count() > 0
+    assert memo.size() == 2
+    assert not os.path.exists(late[0])
 
 
 def test_real_decode_rgba_and_stereo_wav():

@@ -72,8 +72,14 @@ def main() -> None:
     os.makedirs(os.path.dirname(dest), exist_ok=True)
     prior = []
     if os.path.exists(dest):
-        with open(dest) as fh:
-            prior = json.load(fh)
+        try:
+            with open(dest) as fh:
+                prior = json.load(fh)
+        except ValueError:
+            # unparseable: set it aside rather than lose either run
+            os.replace(dest, f"{dest}.bak-{int(time.time())}")
+        if not isinstance(prior, list):
+            prior = [prior]
     prior.append(out)
     with open(dest, "w") as fh:
         json.dump(prior, fh, indent=1)
