@@ -491,10 +491,9 @@ def _run_sessionize_replay(spark, sf_dir, *, n_buckets: int | None = None,
     # 16 state partitions: applyInPandasWithState triggers are bound
     # by parallelizable per-group Python work (measured sweep: 16 beat
     # 8 by ~20% and 2 by ~2.2× on this replay), unlike JVM state ops
-    name = run_to_memory(sessions, output_mode="append",
+    return run_to_memory(sessions, output_mode="append",
                          no_data_batches=watermark is not None,
                          shuffle_partitions=16)
-    return spark.table(name)
 
 
 def q_streaming_sessionize(spark, sf_dir):
@@ -745,9 +744,8 @@ def q_streaming_kmv(spark, sf_dir):
         "ts")
     sketches = streaming_kmv_sketch(hashed, k=KMV_K,
                                     watermark="1 hour")
-    name = run_to_memory(sketches, output_mode="append",
-                         shuffle_partitions=16)
-    out = spark.table(name)
+    out = run_to_memory(sketches, output_mode="append",
+                        shuffle_partitions=16)
     # drop the sentinel's own day (its timeout never fires, but
     # guard against it ever being emitted); real days all precede
     # the sentinel by construction
@@ -860,7 +858,7 @@ def q_streaming_model_score(spark, sf_dir):
         "product_id", "bucket_start",
         F.round(F.col("close") * 1e6).cast("long").alias("p6"))
     preds = streaming_model_score(quant)
-    name = run_to_memory(preds, output_mode="append",
+    sink = run_to_memory(preds, output_mode="append",
                          no_data_batches=False,
                          shuffle_partitions=16)
     # Alignment gate, derived from the SINK: batch model_score only
@@ -886,7 +884,6 @@ def q_streaming_model_score(spark, sf_dir):
     # dense_rank > 6.
     from pyspark.sql import Window
 
-    sink = spark.table(name)
     origins = (sink.filter(F.col("horizon") == 1)
                .select("product_id", "origin_time"))
     w7 = Window.partitionBy("product_id").orderBy(

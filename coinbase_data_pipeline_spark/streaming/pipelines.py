@@ -284,14 +284,15 @@ class _no_data_conf:
         self.spark.conf.set(self.KEY, self.prev)
 
 
-def run_to_memory(df: DataFrame, *, name: str | None = None,
-                  output_mode: str = "complete",
+def run_to_memory(df: DataFrame, *, output_mode: str = "complete",
                   progress_out: list | None = None,
                   no_data_batches: bool = True,
-                  shuffle_partitions: int | None = None) -> str:
+                  shuffle_partitions: int | None = None) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into
-    an in-memory sink; returns the sink table name. The table stays
-    queryable after the stream stops. If `progress_out` is given, the
+    an in-memory sink; returns the sink's contents as a DataFrame. The
+    sink's temp view is dropped before returning (the DataFrame keeps
+    the sink's data alive on its own), so a long-lived session gains
+    no catalog entry per run. If `progress_out` is given, the
     per-micro-batch progress dicts (including `stateOperators` rows
     added/removed/total — the bounded-state evidence) are appended to
     it. ``no_data_batches=False`` opts out of the trailing no-data
@@ -303,7 +304,7 @@ def run_to_memory(df: DataFrame, *, name: str | None = None,
     per-group Python work, where pure-JVM state ops are dominated by
     per-partition state-store commits and want FEWER (measured sweep
     in SCALING.md's replay-profile section)."""
-    name = name or f"stream_{uuid.uuid4().hex[:12]}"
+    name = f"stream_{uuid.uuid4().hex[:12]}"
     with _stream_conf(df.sparkSession, shuffle_partitions), \
             _no_data_conf(df.sparkSession, no_data_batches):
         q = (df.writeStream.format("memory").queryName(name)
@@ -316,7 +317,9 @@ def run_to_memory(df: DataFrame, *, name: str | None = None,
         for p in q.recentProgress:
             progress_out.append(p if isinstance(p, dict)
                                 else _json.loads(p.json))
-    return name
+    out = df.sparkSession.table(name)
+    df.sparkSession.catalog.dropTempView(name)
+    return out
 
 
 def run_file_candle_pipeline(spark: SparkSession, json_dir: str,
@@ -326,9 +329,8 @@ def run_file_candle_pipeline(spark: SparkSession, json_dir: str,
     raw = file_ticker_source(spark, json_dir)
     parsed = ticker_pipeline(raw)
     candles = streaming_candles(parsed, freq=freq, watermark=None)
-    name = run_to_memory(candles, output_mode="complete",
+    return run_to_memory(candles, output_mode="complete",
                          no_data_batches=False)
-    return spark.table(name)
 
 
 def run_file_corpus_pipeline(spark: SparkSession, json_dir: str,
@@ -345,9 +347,8 @@ def run_file_corpus_pipeline(spark: SparkSession, json_dir: str,
     training-data pipeline runs the moment documents land."""
     raw = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", max_files).json(json_dir))
-    name = run_to_memory(scorer(raw), output_mode="append",
+    return run_to_memory(scorer(raw), output_mode="append",
                          no_data_batches=False)
-    return spark.table(name)
 
 
 def run_file_dedup_pipeline(spark: SparkSession, json_dir: str, *,
@@ -368,9 +369,8 @@ def run_file_dedup_pipeline(spark: SparkSession, json_dir: str, *,
     """
     raw = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", max_files).json(json_dir))
-    name = run_to_memory(raw.dropDuplicates(list(key_cols)),
+    return run_to_memory(raw.dropDuplicates(list(key_cols)),
                          output_mode="append", no_data_batches=False)
-    return spark.table(name)
 
 
 def run_file_dedup_watermark_pipeline(spark: SparkSession, json_dir: str,
@@ -396,10 +396,9 @@ def run_file_dedup_watermark_pipeline(spark: SparkSession, json_dir: str,
            .option("maxFilesPerTrigger", max_files).json(json_dir))
     deduped = (raw.withWatermark(ts_col, delay)
                .dropDuplicatesWithinWatermark(list(key_cols)))
-    name = run_to_memory(deduped, output_mode="append",
+    return run_to_memory(deduped, output_mode="append",
                          progress_out=progress_out,
                          no_data_batches=False)
-    return spark.table(name)
 
 
 def run_file_touch_join_pipeline(spark: SparkSession, json_dir: str, *,
@@ -462,11 +461,10 @@ def run_file_touch_join_pipeline(spark: SparkSession, json_dir: str, *,
     # evaluates to 4 — the measured replay optimum, unchanged.
     # Results are partitioning-invariant either way.
     parts = max(4, j.sparkSession.sparkContext.defaultParallelism // 8)
-    name = run_to_memory(j, output_mode="append",
+    return run_to_memory(j, output_mode="append",
                          progress_out=progress_out,
                          no_data_batches=False,
                          shuffle_partitions=parts)
-    return spark.table(name)
 
 
 def run_file_hopping_pipeline(spark: SparkSession, json_dir: str, *,
@@ -491,9 +489,8 @@ def run_file_hopping_pipeline(spark: SparkSession, json_dir: str, *,
                      F.col("w.start").alias("window_start"),
                      F.col("w.end").alias("window_end"),
                      "n_ticks", "high", "low")
-    name = run_to_memory(out, output_mode="complete",
+    return run_to_memory(out, output_mode="complete",
                          no_data_batches=False)
-    return spark.table(name)
 
 
 def streaming_kmv_sketch(events: DataFrame, *, day: str = "day",

@@ -81,8 +81,8 @@ def test_no_row_at_a_time_python_udfs():
 def test_scaling_decade_appendices_intact():
     """SCALING.md's marker-delimited appendices ARE the engine's
     scale evidence: eight per-family 100x curves plus the streaming
-    profile, each maintained by its own tools/*_decades.py (or
-    profile) script and preserved across tools/scale_probe.py regens
+    profile, each regenerated by `tools/scaling.py <name>` (or
+    tools/profile_streaming.py) and preserved across head regens
     by a marker regex. A typo'd or unbalanced marker would make the
     next regen silently drop that family's evidence, so the contract
     is pinned here: every expected appendix present, every start
@@ -92,7 +92,7 @@ def test_scaling_decade_appendices_intact():
     expected = {"streaming_profile", "scale_decades", "ann_decades",
                 "text_decades", "tpch_decades", "events_decades",
                 "stream_decades", "graph_decades"}
-    # the same regex scale_probe.py uses for preservation
+    # the same regex tools/scaling.py uses for preservation
     found = set(re.findall(r"<!-- ([a-z_]+):start -->", scaling))
     missing = expected - found
     assert not missing, f"appendices missing from SCALING.md: {missing}"

@@ -58,8 +58,7 @@ def test_streaming_watermark_append_mode(spark, tmp_path):
         .write.mode("overwrite").text(replay)
     parsed = ticker_pipeline(file_ticker_source(spark, replay))
     candles = streaming_candles(parsed, watermark="10 minutes")
-    name = run_to_memory(candles, output_mode="append")
-    out = spark.table(name)
+    out = run_to_memory(candles, output_mode="append")
     # windows older than max(time) - watermark are finalized and emitted
     assert out.count() > 0
     assert set(out.columns) == {"product_id", "bucket_start", "open",
@@ -83,9 +82,9 @@ def test_streaming_sessionize_matches_batch(spark, tmp_path):
 
     stream = (spark.readStream.schema(ev.schema).parquet(replay))
     sessions = streaming_sessionize(stream, gap_minutes=30)
-    name = run_to_memory(sessions, output_mode="append")
     streamed = {(r.user_id, r.session_start, r.session_end, r.n_events)
-                for r in spark.table(name).collect()}
+                for r in run_to_memory(sessions,
+                                       output_mode="append").collect()}
 
     batch = sessionize(ev, gap_minutes=30)
     w = Window.partitionBy("user_id")
@@ -738,10 +737,10 @@ def test_streaming_sessionize_watermark_flushes_tails(spark, tmp_path):
     progress = []
     sessions = streaming_sessionize(stream, gap_minutes=30,
                                     watermark="1 minute")
-    name = run_to_memory(sessions, output_mode="append",
-                         progress_out=progress)
+    out = run_to_memory(sessions, output_mode="append",
+                        progress_out=progress)
     streamed = {(r.user_id, r.session_start, r.session_end, r.n_events)
-                for r in spark.table(name).collect()
+                for r in out.collect()
                 if r.user_id != sentinel_user}
 
     batch = sessionize(ev, gap_minutes=30)
@@ -796,11 +795,11 @@ def test_streaming_kmv_bounded_state_and_exact_merge(spark, tmp_path):
         hash60(F.col("user_id").cast("string"), "kmv").alias("h"),
         "ts")
     progress = []
-    name = run_to_memory(
+    out = run_to_memory(
         streaming_kmv_sketch(hashed, k=k, watermark="1 hour"),
         output_mode="append", progress_out=progress)
     got = {str(r.day): (r.n_tracked, r.kth_hash)
-           for r in spark.table(name).collect()}
+           for r in out.collect()}
 
     batch = (spark.createDataFrame(
         [(u, "2024-03-01") for u in range(0, 30)]
@@ -1109,9 +1108,10 @@ def test_static_model_cache_train_once_and_invalidate(spark, tmp_path,
 
 def test_memo_and_replay_dirs_stay_bounded(spark, monkeypatch):
     """A long-lived session stays bounded: repeating the streaming and
-    dedup queries must leave the memo size and the replay dirs on disk
-    flat, and a replay dir evicted from the LRU memo must be deleted
-    from disk (the memo holds the only reference to it)."""
+    dedup queries must leave the memo size, the replay dirs on disk
+    and the session's tables (memory-sink temp views) flat, and a
+    replay dir evicted from the LRU memo must be deleted from disk
+    (the memo holds the only reference to it)."""
     from coinbase_data_pipeline_spark import memo
     from coinbase_data_pipeline_spark.plans.catalog_stream import _TMP_ROOT
     from coinbase_data_pipeline_spark.plans.registry import ALL_QUERIES
@@ -1119,7 +1119,7 @@ def test_memo_and_replay_dirs_stay_bounded(spark, monkeypatch):
     def state():
         dirs = set(os.listdir(_TMP_ROOT)) if os.path.isdir(_TMP_ROOT) \
             else set()
-        return memo.size(), dirs
+        return memo.size(), dirs, len(spark.catalog.listTables())
 
     memo.clear()               # releases every dir the memo owns
     before = state()[1]

@@ -64,10 +64,10 @@ def main() -> None:
     orig_run = P.run_to_memory
     orig_cache = CS._cached_replay_dir
 
-    def timed_run_to_memory(df, *, name=None, output_mode="complete",
+    def timed_run_to_memory(df, *, output_mode="complete",
                             progress_out=None, no_data_batches=True,
                             shuffle_partitions=None):
-        name = name or f"stream_{uuid.uuid4().hex[:12]}"
+        name = f"stream_{uuid.uuid4().hex[:12]}"
         with P._stream_conf(df.sparkSession, shuffle_partitions), \
                 P._no_data_conf(df.sparkSession, no_data_batches):
             t0 = time.perf_counter()
@@ -90,7 +90,9 @@ def main() -> None:
             {"batchId": p.get("batchId"),
              "durationMs": p.get("durationMs"),
              "numInputRows": p.get("numInputRows")} for p in prog)
-        return name
+        out = df.sparkSession.table(name)
+        df.sparkSession.catalog.dropTempView(name)
+        return out
 
     def timed_cached_replay_dir(tag, sf_dir, build):
         def timed_build(d):

@@ -2,10 +2,10 @@
 """Per-stage shuffle-byte profile for one or more registry queries.
 
 VERDICT r12 #6 asks for measured bytes-per-stage on the minhash
-family before touching its exchanges (guide §1.5/§7.1). bench.py runs
-with the UI off, so this probe builds its own session with the UI on
-and reads the REST API (localhost only) after driving each query
-through the bench's own materialization action.
+family before touching its exchanges (guide §1.5/§7.1). This probe
+runs each query through the bench's own materialization action in the
+engine's own session (`get_spark`, UI off, so plans match bench.py)
+and reads the new stages from Spark's in-process status store.
 
 Usage: python tools/stage_bytes.py corpus_curation dedup_keep ...
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -13,15 +13,20 @@ Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def _items(jcoll):
+    """Iterate a Java or Scala collection from py4j."""
+    it = jcoll.iterator()
+    while it.hasNext():
+        yield it.next()
 
 
 def main() -> None:
@@ -30,68 +35,48 @@ def main() -> None:
         print("usage: stage_bytes.py <query> [query ...]", file=sys.stderr)
         sys.exit(2)
 
-    # UI must be on for the REST API (the engine session forces it
-    # off); every other conf mirrors session.get_spark so plans are
-    # identical to the bench's
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession, functions as F
-    spark = (
-        SparkSession.builder.appName("stage-bytes")
-        .master(f"local[{cpus}]")
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes",
-                str(128 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+    from pyspark.sql import functions as F
 
     from coinbase_data_pipeline_spark.plans.registry import ALL_QUERIES
+    from coinbase_data_pipeline_spark.session import get_spark
 
-    def rest(path: str):
-        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}{path}") as r:
-            return json.load(r)
+    spark = get_spark("stage-bytes")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    gw = sc._gateway
+
+    def stages():
+        # the status store is fed by the listener bus; drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(_items(sc._jsc.sc().statusStore().stageList(
+            None, False, False, gw.new_array(gw.jvm.double, 0), None)))
 
     # warm
     ALL_QUERIES["available_products"](spark, SF_DIR).count()
 
     for name in names:
         fn = ALL_QUERIES[name]
-        before = {s["stageId"] for s in rest("/stages")}
-        spark.sparkContext.setJobDescription(f"probe:{name}")
+        before = {s.stageId() for s in stages()}
+        sc.setJobDescription(f"probe:{name}")
         t0 = time.perf_counter()
         df = fn(spark, SF_DIR)
         df.agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64(*df.columns))).collect()
         wall = time.perf_counter() - t0
-        spark.sparkContext.setJobDescription(None)
-        time.sleep(0.5)
-        stages = [s for s in rest("/stages") if s["stageId"] not in before]
-        stages.sort(key=lambda s: -(s.get("executorRunTime") or 0))
-        tot_w = sum(s.get("shuffleWriteBytes") or 0 for s in stages)
-        tot_r = sum(s.get("shuffleReadBytes") or 0 for s in stages)
-        print(f"\n=== {name}: wall {wall:.2f}s, {len(stages)} stages, "
+        sc.setJobDescription(None)
+        new = [s for s in stages() if s.stageId() not in before]
+        new.sort(key=lambda s: -s.executorRunTime())
+        tot_w = sum(s.shuffleWriteBytes() for s in new)
+        tot_r = sum(s.shuffleReadBytes() for s in new)
+        print(f"\n=== {name}: wall {wall:.2f}s, {len(new)} stages, "
               f"shuffle write {tot_w/1e6:.1f} MB read {tot_r/1e6:.1f} MB")
-        for s in stages[:14]:
-            print(f"  stage {s['stageId']:>5} {s['status']:>9} "
-                  f"run {s.get('executorRunTime', 0)/1000:7.2f}s  "
-                  f"in {(s.get('inputBytes') or 0)/1e6:8.1f}MB  "
-                  f"sw {(s.get('shuffleWriteBytes') or 0)/1e6:8.1f}MB  "
-                  f"sr {(s.get('shuffleReadBytes') or 0)/1e6:8.1f}MB  "
-                  f"tasks {s.get('numCompleteTasks', 0):>4}  "
-                  f"{(s.get('name') or '')[:60]}")
+        for s in new[:14]:
+            print(f"  stage {s.stageId():>5} {s.status().toString():>9} "
+                  f"run {s.executorRunTime()/1000:7.2f}s  "
+                  f"in {s.inputBytes()/1e6:8.1f}MB  "
+                  f"sw {s.shuffleWriteBytes()/1e6:8.1f}MB  "
+                  f"sr {s.shuffleReadBytes()/1e6:8.1f}MB  "
+                  f"tasks {s.numCompleteTasks():>4}  "
+                  f"{s.name()[:60]}")
 
 
 if __name__ == "__main__":
