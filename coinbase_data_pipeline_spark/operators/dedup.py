@@ -17,7 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .. import memo
 from ..functions.text import (hash60, minhash_signature, token_set, tokens,
                               word_shingles)
 # summation order of the fold-based dot product is an oracle-parity
@@ -37,93 +36,6 @@ def _dense_spread(df: DataFrame, *cols) -> DataFrame:
     parallelism also smooths residual per-bucket skew."""
     parts = 2 * df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(parts, *cols)
-
-
-# Adaptive broadcast guard for the prefix-filter operators
-# (ngram_jaccard_pairs, containment_pairs). Their join build sides —
-# the df table, the prefix/gram streams, the gram-array attach sides —
-# are EXPLODED relations the static planner sizes from compressed-
-# parquet text estimates, understating them by orders of magnitude:
-# at 500k docs it picked BROADCAST for all of them and OOMed an 8g
-# driver (r12 two-decade probe), and AQE cannot demote a statically
-# planned broadcast. The r12 fix hinted them all shuffle_hash, which
-# is safe at every scale but taxes the small-corpus case ~1s per
-# query (sf0.1 A/B, min-of-3 interleaved: containment 8.8s broadcast
-# vs 9.9s hinted) where broadcast was never dangerous. This guard
-# makes the choice from MEASURED bytes instead of either constant:
-# one octet_length aggregate over the text column (~0.08s at sf0.1 —
-# a single-column scan, negligible against the pipeline it guards)
-# decides per invocation. The largest build side is the gram-array
-# attach relation, a small multiple of raw text bytes (~3x shingle
-# overlap + per-row overhead). The safe-text budget is DERIVED from
-# the session's own broadcast budget (VERDICT r12 #5), not a literal:
-# autoBroadcastJoinThreshold/4 keeps the worst ~6x built expansion of
-# the largest build side inside ~1.5x of what the session already
-# accepts for an estimate-accurate broadcast, and a driver-memory/64
-# cap bounds the built relation far from the heap whatever the
-# threshold is set to. At this repo's session config (64 MB
-# threshold, 8g driver) the budget evaluates to the measured-safe
-# 16 MB of r12; a deployment that raises or lowers its broadcast
-# budget moves the guard with it. The 100x probe corpus (~150 MB
-# text) exceeds it by an order of magnitude and takes the
-# shuffle_hash path. Join strategy only; output is engine-identical
-# either way (hash-checked in the r12 A/B).
-BROADCAST_SAFE_TEXT_FRACTION = 4      # of autoBroadcastJoinThreshold
-DRIVER_MEM_SAFE_FRACTION = 64         # of spark.driver.memory
-# None = derive the budget from the session config (the default);
-# an int pins it — the explicit-override surface tests use to force
-# either side of the guard deterministically.
-BROADCAST_SAFE_TEXT_BYTES: int | None = None
-
-def _size_to_bytes(s: str) -> int:
-    """Parse a Spark byte-size conf string ('67108864', '10MB', '8g',
-    '-1') without a JVM round-trip."""
-    s = s.strip().lower().removesuffix("b")
-    for suf, mul in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                     ("t", 1 << 40)):
-        if s.endswith(suf):
-            return int(float(s[:-1]) * mul)
-    return int(s)
-
-
-def _broadcast_safe_text_bytes(spark) -> int:
-    if BROADCAST_SAFE_TEXT_BYTES is not None:
-        return BROADCAST_SAFE_TEXT_BYTES
-    thr = _size_to_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
-    if thr <= 0:
-        # auto-broadcast disabled: the static planner never
-        # broadcasts these sides anyway; keep them hinted off it
-        return 0
-    mem = _size_to_bytes(spark.conf.get("spark.driver.memory", "2g"))
-    return min(thr // BROADCAST_SAFE_TEXT_FRACTION,
-               mem // DRIVER_MEM_SAFE_FRACTION)
-
-
-def _corpus_join_hint(docs: DataFrame, text_col: str) -> str | None:
-    """'shuffle_hash' when the corpus is too large for its exploded
-    gram relations to broadcast safely, else None (let the static
-    planner broadcast). Budget from :func:`_broadcast_safe_text_bytes`.
-
-    The measured-bytes probe is a planner statistic, never query rows,
-    so it is memoized (memo.py) per (docs plan, column, budget) and the
-    fingerprint of the files the plan reads: the two dedup queries over
-    one corpus share one probe (VERDICT r12 #5 "single-shot"), while a
-    corpus rewritten at the same path, or a changed budget, re-probes.
-    Listing the input files costs ~1 ms warm at sf0.1 (p90 2.5 ms)."""
-    budget = _broadcast_safe_text_bytes(docs.sparkSession)
-
-    def probe():
-        total = docs.agg(F.sum(F.octet_length(
-            F.col(text_col).cast("string")))).collect()[0][0]
-        return None if (total or 0) <= budget else "shuffle_hash"
-
-    return memo.cached(("corpus-hint", docs.semanticHash(), text_col,
-                        budget), docs.inputFiles(), probe)
-
-
-def _maybe_hint(df: DataFrame, mode: str | None) -> DataFrame:
-    return df.hint(mode) if mode else df
 
 
 def exact_dedup(docs: DataFrame, *, id_col: str = "doc_id",
@@ -641,13 +553,7 @@ def ngram_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
             F.lit("hash60 collision on gram hash "), F.col("g_h"),
             F.lit(" — prefix filter unsound for this corpus")))
         .cast("long")).otherwise(F.col("_df"))
-    # corpus-scale build sides (df table, prefix streams, array-
-    # carrying attaches) must not be statically broadcast at scale —
-    # fine at 5k docs, driver OOM at sf1-scale (r12 probe). The hint
-    # is chosen from measured text bytes (see _corpus_join_hint):
-    # broadcast where it is provably safe, shuffle_hash beyond.
-    hint = _corpus_join_hint(docs, text_col)
-    ranked = grams.join(_maybe_hint(dfc, hint), "g_h").select(
+    ranked = grams.join(dfc, "g_h").select(
         "a_id", "n", "g_h", guard.alias("_df"))
     # per-doc gram list in the global (df, hash) order; prefix = first
     # n − ⌈t·n⌉ + 1 entries (⌈⌉ via negated floor-div, exact integers)
@@ -690,7 +596,7 @@ def ngram_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                (F.col("i") == 0) & (F.col("j") == 0))
         .when((F.col("i") == 0) | (F.col("j") == 0), F.lit(True))
         .otherwise(F.col("g_h") == F.array_intersect("pa", "pb")[0]))
-    cand_ids = (_maybe_hint(a, hint).join(b, "g_h")
+    cand_ids = (a.join(b, "g_h")
                 .filter((F.col("a_id") < F.col("b_id"))
                         # oracle-semantic IEEE ratio predicate (the
                         # all-pairs SQL applies the identical float
@@ -703,19 +609,16 @@ def ngram_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                 .filter(first_match)
                 .select(F.col("a_id").alias("doc_a"),
                         F.col("b_id").alias("doc_b")))
-    # no _dense_spread here: the hinted attach joins below already
-    # shuffle the candidate stream by doc_a / doc_b (when not
-    # broadcast) — an explicit repartition first would be a third,
-    # wasted shuffle
+    # no _dense_spread here: the attach joins below already shuffle
+    # the candidate stream by doc_a / doc_b (when not broadcast) — an
+    # explicit repartition first would be a third, wasted shuffle
     pairs = (cand_ids
-             .join(_maybe_hint(
-                 base.select(F.col(id_col).alias("doc_a"),
-                             F.col("toks").alias("atoks"),
-                             F.col("n").alias("na")), hint), "doc_a")
-             .join(_maybe_hint(
-                 base.select(F.col(id_col).alias("doc_b"),
-                             F.col("toks").alias("btoks"),
-                             F.col("n").alias("nb")), hint), "doc_b"))
+             .join(base.select(F.col(id_col).alias("doc_a"),
+                               F.col("toks").alias("atoks"),
+                               F.col("n").alias("na")), "doc_a")
+             .join(base.select(F.col(id_col).alias("doc_b"),
+                               F.col("toks").alias("btoks"),
+                               F.col("n").alias("nb")), "doc_b"))
     # shingle sets are distinct → |a∩b| = na + nb - |a∪b| exactly;
     # one O(n) array op per pair instead of intersect + union
     union = F.size(F.array_union("atoks", "btoks")).cast("double")
@@ -1245,41 +1148,27 @@ def containment_pairs(docs: DataFrame, *, n: int = 3,
     grams = (base.select("a_id", "sz", F.explode("g").alias("_gram"))
              .select("a_id", "sz",
                      hash60(F.col("_gram"), "cont").alias("gram_h")))
-    # CORPUS-SCALE relations (the df table, the full gram stream, the
-    # array-carrying attach sides) must not be statically broadcast at
-    # scale: the planner sizes them from compressed-parquet text
-    # estimates, which understate exploded gram relations by orders of
-    # magnitude — at sf1-scale (500k docs) it picked BROADCAST for all
-    # four and OOMed an 8g driver (r12 two-decade probe). AQE cannot
-    # demote a statically-planned broadcast, so the guard must be in
-    # the plan; shuffle_hash keeps the hash-join shape (no sort)
-    # without the driver-resident build. The hint is chosen from
-    # MEASURED text bytes (_corpus_join_hint): broadcast where it is
-    # provably safe, shuffle_hash beyond.
-    hint = _corpus_join_hint(docs, text_col)
     dfc = grams.groupBy("gram_h").agg(F.count(F.lit(1)).alias("_df"))
     wd = Window.partitionBy("a_id").orderBy("_df", "gram_h")
-    ranked = (grams.join(_maybe_hint(dfc, hint), "gram_h")
+    ranked = (grams.join(dfc, "gram_h")
               .withColumn("_rn", F.row_number().over(wd)))
     # required shared = ceil(t * |A|), exactly, in integers
     required = -F.floor(F.lit(-t_num) * F.col("sz") / F.lit(t_den))
     prefix = ranked.filter(F.col("_rn") <= F.col("sz") - required + 1)
-    cand = (_maybe_hint(prefix.select("a_id", "gram_h"), hint)
+    cand = (prefix.select("a_id", "gram_h")
             .join(grams.select(F.col("a_id").alias("b_id"), "gram_h"),
                   "gram_h")
             .filter(F.col("a_id") != F.col("b_id"))
             .select("a_id", "b_id")
             .dropDuplicates(["a_id", "b_id"]))
     # no _dense_spread: dropDuplicates already shuffled by the pair
-    # key and the hinted attaches below re-shuffle by a_id/b_id (when
-    # not broadcast)
+    # key and the attaches below re-shuffle by a_id/b_id (when not
+    # broadcast)
     withg = (cand
-             .join(_maybe_hint(
-                 base.select("a_id", F.col("g").alias("ga"),
-                              F.col("sz").alias("na")), hint), "a_id")
-             .join(_maybe_hint(
-                 base.select(F.col("a_id").alias("b_id"),
-                             F.col("g").alias("gb")), hint), "b_id"))
+             .join(base.select("a_id", F.col("g").alias("ga"),
+                               F.col("sz").alias("na")), "a_id")
+             .join(base.select(F.col("a_id").alias("b_id"),
+                               F.col("g").alias("gb")), "b_id"))
     c = (F.size(F.array_intersect("ga", "gb")).cast("double")
          / F.col("na"))
     return (withg

@@ -58,50 +58,40 @@ for _part in _QUERY_PARTS:
 # r01..r04 map to the repo's work sessions 1..4 (one numbering
 # scheme).
 #
-# ROUND-13 WINDOW: (a) none — every oracle-paired query has a driver
+# ROUND-14 WINDOW: (a) none — every oracle-paired query has a driver
 # row;
-# (b) compute or plan changed in round 13 (optimization round 2):
-# streaming_model_score (serve-gate cutoff: per-product unbounded
-# collect_set → horizon=1 filter + row_number window with
-# WindowGroupLimit pushdown — hash-identical at sf0.1, VERDICT r12
-# #1), streaming_touch_join (stream-stream join state partitions
-# derived from defaultParallelism instead of the constant 4 — same
-# value at local[32], VERDICT r12 #4), q9_product_profit +
-# q8_market_share (selective part join moved BEFORE the SF×SF orders
-# join; q9 additionally demotes orders from static broadcast via a
-# plan-metadata size guard that is a no-op at catalog scales —
-# hash-identical at sf0.1 and 100×, VERDICT r12 #7),
-# dedup_ngram_jaccard + dedup_containment (_corpus_join_hint budget
-# now derived from session config and memoized per plan lineage —
-# same decision at every catalog scale, VERDICT r12 #5);
-# q21_suppliers_kept_waiting also changed (countDistinct Expand ×3
-# removed via per-(order,supplier) pre-aggregation — all-integer,
-# hash-identical at 100×; listed in the r08 block below);
-# (c) the 11 remaining r08 rows (exactly 5 rounds old — the bound's
-# worst case; q8/q9 of that block are already in (b)), then the
-# first 33 of the 46 r09 rows alphabetically; the 13 r09 leftovers
-# (q15_top_supplier … volume_rollup) rotate r14 at age 5.
+# (b) the join-strategy policy moved into the session config
+# (static broadcast threshold 10 MB, AQE's 64 MB), replacing q9's
+# orders demotion and the dedup operators' measured-text-bytes hint:
+# q9_product_profit, dedup_ngram_jaccard and dedup_containment ran
+# that deleted code. With expression ids normalized every registry
+# plan is identical at sf0.01; at sf0.1 rfm_scores and service_health
+# plan one join as sort-merge (a side estimated between 10 and 64 MB),
+# which AQE may turn back into a broadcast at runtime;
+# (c) the 13 r09 leftovers (age 5 this round, the bound's worst
+# case; service_health is already in (b)), then the r10 rows
+# alphabetically.
 _CHECK_FIRST = [
-    # (b) round-13-changed compute/plans
-    "streaming_model_score", "streaming_touch_join",
-    "q9_product_profit", "q8_market_share",
-    "dedup_ngram_jaccard", "dedup_containment",
-    # (c) oldest evidence first: the 11 r08 leftovers
-    "q20_part_promotion", "q21_suppliers_kept_waiting",
-    "q22_global_sales_opportunity", "q2_min_cost_supplier",
-    "q4_order_priority", "quality_score", "scale_fit_transform",
-    "streaming_candles", "text_normalize", "token_count", "top_k",
-    # r09 rows (first 33 alphabetically; the 13 leftovers rotate r14)
-    "acf", "ann_lsh", "association_rules", "bm25_search", "bollinger",
-    "candle_grid_fill", "candle_patterns", "candle_resample_salted",
-    "corpus_stats", "csv_ingest", "curriculum_dropout",
-    "daily_active_users", "dataset_manifest", "decontaminate",
-    "doc_chunk", "donchian_channel", "drawdown_durations",
-    "dsir_select", "dsir_weights", "embedding_quantize", "event_paths",
-    "event_type_pivot", "fixed_k_sample", "funnel", "kmv_set_ops",
-    "max_drawdown", "mixture_resample", "multimodal_frames",
-    "multimodal_meta", "ngram_doc_frequency", "pii_scrub",
-    "prediction_cadence", "price_quantiles",
+    # (b) round-14-changed code paths
+    "q9_product_profit", "dedup_ngram_jaccard", "dedup_containment",
+    "rfm_scores", "service_health",
+    # (c) oldest evidence first: the 13 r09 leftovers
+    "q15_top_supplier", "range_join", "repetition_score",
+    "retention_cohorts", "rolling_correlation", "sessionize",
+    "stochastic", "stratified_sample", "tfidf_top_terms",
+    "validate_input", "value_histogram", "volume_rollup",
+    # r10 rows (first 33 alphabetically)
+    "ann_ivf", "ann_ivfpq", "ann_pq", "approx_quantiles_hist",
+    "bloom_semi_join", "boilerplate_ngrams", "cluster_quality_profile",
+    "cross_sectional_rank", "curriculum_augment", "dedup_spans",
+    "dedup_tfidf_cosine", "gopher_quality", "grouped_scale_full",
+    "heavy_hitters_cms", "hopping_volume", "keltner_channel",
+    "kmv_distinct_users", "kmv_weekly_merge", "mfi", "model_score",
+    "perplexity_proxy", "pivot_points", "pmi_collocations", "pq_encode",
+    "price_anomalies", "purchase_attribution", "q19_discounted_revenue",
+    "q7_volume_shipping", "quality_classifier",
+    "quality_classifier_scores", "quantile_transform", "return_moments",
+    "returns_correlation",
 ]
 
 ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}

@@ -7,9 +7,11 @@ inside the synthetic 1995–2001 range).
 Shuffle strategy, stated per query and visible in .explain:
 - broadcast HINTS only on fixed-cardinality dims (nation, region).
   Everything SF-proportional (customer, supplier, part, orders) is
-  left unhinted: Catalyst's parquet size stats broadcast it while it
-  fits under autoBroadcastJoinThreshold, and AQE shuffles it when it
-  doesn't — the plan that survives a 100× scale-up.
+  left to the session's join policy (session.py): the static planner
+  broadcasts it only while its plan estimate is under 10 MB, and
+  beyond that plans a shuffle join that AQE re-broadcasts only when
+  the side's exact runtime shuffle size is under 64 MB — the plan
+  that survives a 100× scale-up.
 - aggregations are partial (map-side combine) before their single
   exchange.
 """
@@ -25,37 +27,6 @@ from .catalog import RND
 
 def _rev():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
-def _demote_big_broadcast(df: DataFrame) -> DataFrame:
-    """Keep an SF-proportional join side OFF the static-broadcast path
-    once it is genuinely large (r13, guide §3.1 "pick the strategy
-    deliberately").
-
-    The static planner compares a side's COLUMNAR scan estimate
-    against autoBroadcastJoinThreshold, but the broadcast HASH
-    RELATION it then builds costs ~5x that estimate (row format +
-    hash table: measured 45 MB orders estimate -> ~240 MB built at
-    the 100x probe) and is built single-threaded on the driver every
-    run — at SF10 volume the all-broadcast q9 plan spent ~11 s of its
-    14.5 s wall there vs 3.4 s with the orders join as sort-merge.
-    AQE cannot demote a statically planned broadcast, so the demotion
-    must happen here: when the side's own plan-metadata estimate (no
-    job — parquet footer stats through column pruning) crosses HALF
-    the session threshold, hint `merge`; AQE still re-plans the
-    shuffle at runtime. Below that the planner is left alone, so at
-    catalog scales (sf0.001-0.1) the plan — and therefore the float
-    accumulation order and the driver hash — is byte-identical to
-    leaving this helper out."""
-    from ..operators.dedup import _size_to_bytes
-    spark = df.sparkSession
-    thr = _size_to_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
-    if thr <= 0:
-        return df
-    est = int(str(
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    return df.hint("merge") if est > thr // 2 else df
 
 
 def q4_order_priority(spark, sf_dir):
@@ -375,12 +346,11 @@ def q9_product_profit(spark, sf_dir):
     checked guarantee, since double summation order is not exact for
     2dp×2dp terms."""
     li = load_table(spark, sf_dir, "lineitem")
-    # orders is the one SF×SF side left after the part prune; demote
-    # it from static broadcast once its footer estimate says the
-    # built hash relation would dwarf the session's broadcast budget
-    # (100x probe: 14.5 s all-broadcast vs 3.4 s merge — the 15M-row
-    # broadcast build dominated). No-op at catalog scales.
-    od = _demote_big_broadcast(load_table(spark, sf_dir, "orders"))
+    # orders is the one SF×SF side left after the part prune; past the
+    # session's static broadcast threshold it is shuffle-joined (100x
+    # probe: 14.5 s all-broadcast vs 3.4 s merge — the 15M-row
+    # broadcast build dominated)
+    od = load_table(spark, sf_dir, "orders")
     su = load_table(spark, sf_dir, "supplier")
     pa = load_table(spark, sf_dir, "part").filter(
         F.col("p_name").contains("red"))

@@ -2,6 +2,14 @@
 
 AQE handles runtime re-planning (partition coalescing, skew-join
 splitting); Arrow makes the few pandas-based operators batch-efficient.
+
+Join strategy is one session policy. The static planner broadcasts a
+side only while its plan estimate is under Spark's 10 MB default:
+estimates understate what gets built (q9's orders at the 100x probe:
+45 MB estimated, ~240 MB built; exploded dedup gram relations by far
+more), and AQE cannot undo a static broadcast. Every larger side is
+planned as a shuffle join, and AQE re-broadcasts it only when its
+exact runtime shuffle size is under 64 MB.
 """
 
 from __future__ import annotations
@@ -9,6 +17,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+STATIC_BROADCAST_BYTES = 10 * 1024 * 1024
+ADAPTIVE_BROADCAST_BYTES = 64 * 1024 * 1024
+
+# the package root: a tool's sys.path insert reaches only the driver,
+# while the Python workers (pandas UDFs) inherit the JVM's environment
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "coinbase-data-pipeline-spark",
@@ -29,7 +44,10 @@ def get_spark(app_name: str = "coinbase-data-pipeline-spark",
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.autoBroadcastJoinThreshold",
+                str(STATIC_BROADCAST_BYTES))
+        .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
+                str(ADAPTIVE_BROADCAST_BYTES))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
@@ -53,10 +71,18 @@ def get_spark(app_name: str = "coinbase-data-pipeline-spark",
             ("spark.sql.legacy.parquet.nanosAsLong", "true"),
             ("spark.sql.ansi.enabled", "false"),
             ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+            ("spark.sql.autoBroadcastJoinThreshold",
+             str(STATIC_BROADCAST_BYTES)),
+            ("spark.sql.adaptive.autoBroadcastJoinThreshold",
+             str(ADAPTIVE_BROADCAST_BYTES)),
         ):
             try:
                 active.conf.set(k, v)
             except Exception:
                 pass  # static or locked conf — builder defaults apply
         return active
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+             if p]
+    if _ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([_ROOT, *paths])
     return builder.master(f"local[{cpus}]").getOrCreate()

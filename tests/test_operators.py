@@ -2906,112 +2906,3 @@ def test_ngram_jaccard_prefix_candidates_content_keyed(spark):
         for j in range(8))) for i in range(60)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     assert ngram_jaccard_pairs(df).count() == 0
-
-
-def _hint_with_job_count(spark, docs):
-    """(_corpus_join_hint(docs, "text"), Spark jobs it ran)."""
-    import uuid
-
-    from coinbase_data_pipeline_spark.operators.dedup import (
-        _corpus_join_hint)
-
-    sc = spark.sparkContext
-    group = f"hint-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        hint = _corpus_join_hint(docs, "text")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return hint, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_corpus_join_hint_is_size_adaptive(spark, monkeypatch):
-    """The r12 broadcast guard for the prefix-filter operators decides
-    the join strategy from MEASURED corpus text bytes, not estimates:
-    small corpora keep the planner's broadcast (the static estimate is
-    safe there and ~1s faster at sf0.1), large ones force shuffle_hash
-    (the static planner under-sizes exploded gram relations by ~50x
-    and a statically planned broadcast OOMs the driver at 500k docs —
-    AQE cannot demote it). Both modes must be output-identical."""
-    from coinbase_data_pipeline_spark import memo
-    from coinbase_data_pipeline_spark.operators import dedup as dd
-    from coinbase_data_pipeline_spark.operators.dedup import (
-        _corpus_join_hint, containment_pairs, ngram_jaccard_pairs)
-
-    docs = [(i, " ".join(f"tok{chr(97 + (i + j) % 7)}" for j in range(6)))
-            for i in range(40)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-
-    # r13: the budget is DERIVED from the session's broadcast/driver
-    # config, not a literal — at this repo's session config (64 MB
-    # autoBroadcastJoinThreshold) the threshold/4 leg evaluates to
-    # the measured-safe 16 MB of r12, floored by driver-memory/64
-    thr = dd._size_to_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    assert dd._broadcast_safe_text_bytes(spark) == min(
-        thr // dd.BROADCAST_SAFE_TEXT_FRACTION,
-        dd._size_to_bytes(spark.conf.get("spark.driver.memory", "2g"))
-        // dd.DRIVER_MEM_SAFE_FRACTION)
-    assert dd._size_to_bytes("67108864") == 64 * 1024 * 1024
-    assert dd._size_to_bytes("10MB") == 10 * 1024 * 1024
-    assert dd._size_to_bytes("8g") == 8 * 1024**3
-    assert dd._size_to_bytes("-1") == -1
-
-    # tiny corpus: measured bytes under the threshold -> no hint.
-    # The probe is single-shot per (plan, col, budget, input files): a
-    # second build over the same lineage replays the memoized hint (a
-    # planner statistic, never rows) without running a Spark job
-    hint, jobs = _hint_with_job_count(spark, df)
-    assert hint is None and jobs > 0
-    n = memo.size()
-    assert _hint_with_job_count(spark, df) == (None, 0)
-    assert memo.size() == n
-    # beyond the measured threshold -> shuffle_hash, regardless of
-    # what the static planner would estimate (budget is part of the
-    # memo key, so the override re-decides rather than replaying)
-    monkeypatch.setattr(dd, "BROADCAST_SAFE_TEXT_BYTES", 0)
-    assert _corpus_join_hint(df, "text") == "shuffle_hash"
-
-    # with the guard engaged, no corpus-scale build side may plan as
-    # a broadcast join; the candidate/attach joins hash-join shuffled
-    for fn in (ngram_jaccard_pairs, containment_pairs):
-        out_guarded = fn(df)
-        plan = out_guarded._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan, plan
-        assert "BroadcastHashJoin" not in plan, plan
-        rows_guarded = sorted(map(tuple, out_guarded.collect()))
-        monkeypatch.setattr(dd, "BROADCAST_SAFE_TEXT_BYTES",
-                            16 * 1024 * 1024)
-        rows_bcast = sorted(map(tuple, fn(df).collect()))
-        monkeypatch.setattr(dd, "BROADCAST_SAFE_TEXT_BYTES", 0)
-        assert rows_guarded == rows_bcast and rows_guarded
-
-
-def test_corpus_join_hint_reprobes_rewritten_corpus(spark, tmp_path):
-    """A corpus rewritten at the same path from 10 short docs to 20 MB
-    of text must re-probe and take shuffle_hash: a hint keyed on the
-    plan alone (same path, same schema, same semantic hash) replays
-    the small corpus's "no hint" — the broadcast that OOMs the driver
-    at scale, which is what the guard exists to prevent."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from coinbase_data_pipeline_spark.operators import dedup as dd
-    from coinbase_data_pipeline_spark.sources.tables import load_table
-
-    d = tmp_path / "sf"
-    d.mkdir()
-    path = str(d / "documents.parquet")
-    pq.write_table(pa.table({"doc_id": list(range(10)),
-                             "text": [f"doc {i}" for i in range(10)]}),
-                   path)
-    docs = load_table(spark, str(d), "documents")
-    assert _hint_with_job_count(spark, docs)[0] is None
-
-    mb = 1 << 20
-    assert 20 * mb > dd._broadcast_safe_text_bytes(spark)
-    pq.write_table(pa.table({"doc_id": list(range(20)),
-                             "text": ["x" * mb] * 20}), path)
-    docs = load_table(spark, str(d), "documents")
-    hint, jobs = _hint_with_job_count(spark, docs)
-    assert hint == "shuffle_hash" and jobs > 0

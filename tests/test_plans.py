@@ -5,6 +5,7 @@ cartesian product, extra shuffle) fails CI instead of shipping.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -149,6 +150,93 @@ def test_no_forced_broadcast_of_sf_proportional_tables(spark, name):
     assert len(hinted) == analyzed.count("ResolvedHint"), (
         "unrecognized hinted relation", hinted)
     assert set(hinted) <= {"nation", "region", "<scalar-agg>"}, hinted
+
+
+def _broadcast_build_tables(plan) -> list[set[str]]:
+    """Per BroadcastHashJoin in an executed (adaptive) plan, the tables
+    its build side reads; a non-parquet leaf (a checkpointed or
+    in-memory relation) reads as "<rdd>"."""
+    def walk(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return [node.executedPlan()]
+        if name.endswith("QueryStage"):
+            return [node.plan()]
+        if name == "ReusedExchange":
+            return [node.child()]
+        kids = node.children()
+        return [kids.apply(i) for i in range(kids.size())]
+
+    def leaves(node):
+        kids = walk(node)
+        return [node] if not kids else [x for k in kids for x in leaves(k)]
+
+    def tables(node):
+        out = set()
+        for leaf in leaves(node):
+            found = re.findall(r"/(\w+)\.parquet\b", leaf.toString())
+            out |= set(found) or {"<rdd>"}
+        return out
+
+    builds, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "BroadcastHashJoin":
+            left = node.buildSide().toString() == "BuildLeft"
+            builds.append(tables(node.left() if left else node.right()))
+        stack.extend(walk(node))
+    return builds
+
+
+def test_growing_join_sides_leave_broadcast_past_thresholds(spark):
+    """The join policy's large branch, forced at sf0.001: with both
+    broadcast thresholds (static and adaptive) at 1 byte, q9's orders
+    side and every exploded gram relation of dedup_containment must be
+    shuffle-joined in the final adaptive plan — only the explicitly
+    hinted fixed-size dims (nation, region) may still broadcast — and
+    the results must keep oracle parity."""
+    from test_oracle_parity import duck_con, normalize
+
+    from coinbase_data_pipeline_spark.plans.registry import ALL_ORACLES
+
+    sf = os.path.join(os.path.dirname(SF), "sf0.001")
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    prev = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "1")
+        for name in ("q9_product_profit", "dedup_containment"):
+            df = ALL_QUERIES[name](spark, sf)
+            rows = df.collect()
+            builds = _broadcast_build_tables(
+                df._jdf.queryExecution().executedPlan())
+            assert all(b <= {"nation", "region"} for b in builds), (
+                name, builds)
+            oracle = duck_con(sf).execute(ALL_ORACLES[name])
+            ocols = [d[0] for d in oracle.description]
+            assert rows and normalize([tuple(r) for r in rows],
+                                      df.columns) == normalize(
+                oracle.fetchall(), ocols), name
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def test_get_spark_reapplies_broadcast_policy(spark):
+    """get_spark() on a live session restores the join policy's two
+    thresholds, so a session that was started elsewhere (or changed
+    since) plans joins by the engine's policy, not by its own."""
+    from coinbase_data_pipeline_spark import session
+
+    keys = {"spark.sql.autoBroadcastJoinThreshold":
+            session.STATIC_BROADCAST_BYTES,
+            "spark.sql.adaptive.autoBroadcastJoinThreshold":
+            session.ADAPTIVE_BROADCAST_BYTES}
+    for k in keys:
+        spark.conf.set(k, "12345")
+    assert session.get_spark("tests", shuffle_partitions=8) is spark
+    assert {k: int(spark.conf.get(k)) for k in keys} == keys
 
 
 def test_token_packing_salted_plan(spark):

@@ -1,7 +1,6 @@
 #!/usr/bin/env python3
 """Scaling harness: wall time and output volume of the engine's
-operator families against input multiples, kept in SCALING.md. Run
-from the repository root (Python workers import the package from it):
+operator families against input multiples, kept in SCALING.md:
 
     python tools/scaling.py                   # head tables (1x/2x/4x, 10x)
     python tools/scaling.py tpch_decades ...  # the named 100x appendices
@@ -590,6 +589,34 @@ def _planes(mult: int) -> int:
     return 4 + 4 * round(math.log10(mult))
 
 
+def ann_footer(res: dict) -> list[str]:
+    """ann_decades' footer; its ratios are the top multiple's over 1x."""
+    def ratios(op):
+        by = res[op]
+        lo, hi = min(by), max(by)
+        return by[hi][0] / by[lo][0], by[hi][1] / max(1, by[lo][1]), hi
+
+    sem_wall, sem_rows, hi = ratios("semantic_dedup")
+    knn_wall = ratios("knn_graph")[0]
+    return [
+        "",
+        "semantic_dedup's rows ratio exceeds mult because \"scramble to",
+        "~0\" has a noise floor: a sign-flip cosine at dim 64 is a",
+        "zero-mean sum whose tail mass above the probe's 0.4 threshold",
+        "is small but nonzero per pair, and the within-cluster pair",
+        "space it is screened against grows ~linearly with n — so",
+        "cross-copy coincidence pairs (real cosines >= 0.4 of the",
+        "TRANSFORMED corpus, not false positives of the operator)",
+        f"come to dominate its output at {hi}x. Wall tracks that output",
+        f"({sem_wall:.0f}x wall / {sem_rows:.0f}x rows = per-pair cost "
+        "still FALLING), which",
+        "is the sub-quadratic signal; knn_graph, whose top-k-per-vector",
+        "output is pinned to exactly mult x rows, is the clean",
+        f"candidate-generation reading: {knn_wall:.1f}x wall at {hi}x data.",
+        "",
+    ]
+
+
 FAMILIES: dict[str, Family] = {
     # dedup_minhash_lsh / containment: content-keyed buckets and
     # prefix keys land disjoint copies in disjoint buckets — wall
@@ -657,22 +684,8 @@ FAMILIES: dict[str, Family] = {
                 .filter(F.col("vec_id") % F.lit(m) == 0)),
                note="64 queries, fixed lists"),
         ], cell="{wall:.1f}s ({vol:,}; {note}{ratio})")],
-        footer=[
-            "",
-            "semantic_dedup's rows ratio exceeds mult because \"scramble to",
-            "~0\" has a noise floor: a sign-flip cosine at dim 64 is a",
-            "zero-mean sum whose tail mass above the probe's 0.4 threshold",
-            "is small but nonzero per pair, and the within-cluster pair",
-            "space it is screened against grows ~linearly with n — so",
-            "cross-copy coincidence pairs (real cosines >= 0.4 of the",
-            "TRANSFORMED corpus, not false positives of the operator)",
-            "come to dominate its output at 100x. Wall tracks that output",
-            "(per-pair cost still FALLING at 100x), which is the",
-            "sub-quadratic signal; knn_graph, whose top-k-per-vector",
-            "output is pinned to exactly mult x rows, is the clean",
-            "candidate-generation reading.",
-            "",
-        ], ratio=", {wall_x:.1f}x wall / {vol_x:.1f}x rows"),
+        footer=ann_footer,
+        ratio=", {wall_x:.1f}x wall / {vol_x:.1f}x rows"),
     # bm25's fixed query set keeps its output constant (the contrast
     # line); cms's sketch grid is fixed 4x4096 (flat state); bpe runs
     # `merges` global pair-count rounds.
@@ -879,14 +892,15 @@ HEAD_PROSE = [
     "uncapped by design, so its row shows the true output curve",
     "(~14x pairs at 4x input) and wall tracks it — the",
     "exact-verify stage's irreducible per-pair work. The",
-    "containment/ngram rows also carry the r12 no-broadcast tax:",
-    "their corpus-scale join sides are shuffle_hash-hinted (the",
-    "statically-planned broadcasts OOM at 500k docs — see the",
-    "two-decade appendix), so on THIS replicated corpus — where",
-    "copies share gram hashes and the un-hinted plan could still",
-    "broadcast at 10x — they read ~3x slower than the r11 cells;",
-    "the appendix's content-disjoint curve is the",
-    "scale-representative one. Growth",
+    "containment/ngram join sides follow the session's join",
+    "policy (session.py): an exploded gram relation is statically",
+    "broadcast only while its plan estimate is under 10 MB, and",
+    "beyond that it is shuffle-joined, with AQE re-broadcasting it",
+    "only when its exact runtime shuffle size is under 64 MB (the",
+    "r12 static broadcasts of these sides OOMed an 8g driver at",
+    "500k docs — see the two-decade appendix). Copies of THIS",
+    "replicated corpus share gram hashes, so the appendix's",
+    "content-disjoint curve is the scale-representative one. Growth",
     "beyond the volume curve in ANY row would",
     "indicate a candidate-generation blow-up; the",
     "bucketed-not-all-pairs evidence is (a) the plan audits (no",
