@@ -19,7 +19,8 @@ import time
 
 from pyspark.sql import functions as F
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from coinbase_data_pipeline_spark.sources.tables import (
+    DEFAULT_SF_DIR as SF_DIR)
 
 # Headliners: the reference's hot path (candles + features + forecast
 # eval), the relational core, and the dedup/ANN/text extensions.

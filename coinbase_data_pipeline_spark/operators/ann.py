@@ -181,7 +181,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, *,
 def lsh_topk(corpus: DataFrame, queries: DataFrame, *,
              id_col: str = "vec_id", vec_col: str = "embedding",
              dim: int = 64, planes: int = 8, bands: int = 4,
-             k: int = 5, carry_masks: bool | None = None) -> DataFrame:
+             k: int = 5) -> DataFrame:
     """Banded random-hyperplane ANN: a candidate pair is any (query,
     corpus) sharing a bucket in ANY of the `bands` independent
     sketches (OR-amplification → recall), each sketch AND-ing `planes`
@@ -199,14 +199,12 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, *,
     one exchange removed from the candidate stream). Recall vs
     :func:`brute_force_topk` is pytest-gated (tests/test_operators.py).
 
-    `carry_masks` follows the family contract (dedup.CARRY_MASKS):
-    without masks, a pair whose corpus row was capped out of the
-    FIRST signature-agreeing band is lost even if both sides survive
-    a later band; with masks the capped band no longer suppresses the
-    later emission (ADVICE r08 — only the corpus side is ever capped
-    here, so the query-side mask is a constant 0).
+    Only the corpus side is capped (dedup.cap_hot_buckets), under the
+    family's recall contract: a (query, corpus) pair is missed iff the
+    corpus row was capped out of the FIRST band where the two sketches
+    agree, even if it survives a later agreeing band.
     """
-    from .dedup import _first_match_band, _mask_cols, cap_hot_buckets
+    from .dedup import _band, _first_match_band, cap_hot_buckets
 
     base = _corpus_side(corpus, id_col, vec_col)
 
@@ -214,33 +212,17 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, *,
         return [sketch(F.col(vc), dim, planes, offset=b * planes)
                 .alias(f"s{b}") for b in range(bands)]
 
-    # corpus-side hot-bucket bound (keys = the join keys, so the
-    # guard's exchange is the join's own); the query side is a small
-    # broadcast relation and needs no cap
-    cband = (base.select("nn_id", *_svals("cv"))
-             .select("nn_id",
-                     *[F.col(f"s{b}").alias(f"a_s{b}")
-                       for b in range(bands)],
-                     F.posexplode(F.array(*[f"s{b}"
-                                            for b in range(bands)]))
-                     .alias("band", "bsig")))
-    am, bm = _mask_cols(carry_masks)
-    cband = cap_hot_buckets(cband, "nn_id", keys=("band", "bsig"),
-                            mask_col=am)
+    # corpus-side hot-bucket bound (its window partitions on the join
+    # keys, so the guard's exchange is the join's own); the query side
+    # is a small broadcast relation and needs no cap
+    cband = cap_hot_buckets(_band(base.select("nn_id", *_svals("cv")),
+                                  bands, "nn_id"), "nn_id")
     qside = _query_side(queries, id_col, vec_col)
-    qband = (qside.select("query_id", *_svals("qv"))
-             .select("query_id",
-                     *[F.col(f"s{b}").alias(f"b_s{b}")
-                       for b in range(bands)],
-                     F.posexplode(F.array(*[f"s{b}"
-                                            for b in range(bands)]))
-                     .alias("band", "bsig")))
-    if am:
-        # broadcast query side is never capped — its mask is 0
-        qband = qband.withColumn(bm, F.lit(0).cast("long"))
+    qband = _band(qside.select("query_id", *_svals("qv")), bands,
+                  "query_id", side="b")
     cand_ids = (cband.join(F.broadcast(qband), ["band", "bsig"])
                 .filter(F.col("query_id") != F.col("nn_id"))
-                .filter(_first_match_band(bands, am, bm))
+                .filter(_first_match_band(bands))
                 .select("query_id", "nn_id"))
     cand = (cand_ids.join(base, "nn_id")
             .join(F.broadcast(qside), "query_id"))
@@ -249,8 +231,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, *,
 
 def knn_graph(emb: DataFrame, *, id_col: str = "vec_id",
               vec_col: str = "embedding", dim: int = 64,
-              planes: int = 4, bands: int = 8, k: int = 5,
-              carry_masks: bool | None = None) -> DataFrame:
+              planes: int = 4, bands: int = 8, k: int = 5) -> DataFrame:
     """Approximate k-nearest-neighbor GRAPH over the corpus itself —
     the substrate for graph-based curation (SemDeDup clustering,
     near-dup PageRank, label propagation): per vector, its top-k
@@ -259,48 +240,25 @@ def knn_graph(emb: DataFrame, *, id_col: str = "vec_id",
 
     Unlike :func:`lsh_topk` (small broadcast query side), BOTH sides
     are the corpus: candidates come from a (band, bucket) equi-join of
-    the banded sketch relation with itself, and each colliding pair is
-    emitted exactly once from its FIRST matching band
-    (dedup._first_match_band carried on the banded rows — bands × 4 B
-    each, not vectors) instead of a global distinct over the candidate
-    stream. Vectors re-attach AFTER candidate generation, then the
-    shared `_rerank` scores and ranks (identical tie policy to every
-    other ANN entry). Per-vector candidate count is ~bands·n/2^planes;
-    no cross join ever materializes.
+    the banded sketch relation with itself (dedup._sketch_candidates),
+    each colliding pair emitted exactly once from its FIRST matching
+    band instead of a global distinct over the candidate stream.
+    Vectors re-attach AFTER candidate generation, then the shared
+    `_rerank` scores and ranks (identical tie policy to every other
+    ANN entry). Per-vector candidate count is ~bands·n/2^planes; no
+    cross join ever materializes.
 
     The hyperplanes are deterministic constants, so the whole graph is
     SQL-oracle-checkable; recall of true top-k edges is pytest-gated.
     """
-    from .dedup import (_dense_spread, _first_match_band, _mask_cols,
-                        cap_hot_buckets)
+    from .dedup import _sketch_candidates
 
-    v = F.col(vec_col).cast("array<double>")
-    base = spread_scan(emb).select(F.col(id_col).alias("a_id"),
-                                   v.alias("v"))
-    base = base.withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    svals = [sketch(F.col("v"), dim, planes, offset=b * planes)
-             .alias(f"s{b}") for b in range(bands)]
-    sigd = base.select("a_id", *svals)
-    banded = sigd.select(
-        "a_id",
-        *[F.col(f"s{b}").alias(f"a_s{b}") for b in range(bands)],
-        F.posexplode(F.array(*[f"s{b}" for b in range(bands)]))
-        .alias("band", "bsig"))
-    am, bm = _mask_cols(carry_masks)
-    banded = cap_hot_buckets(banded, "a_id", mask_col=am)
-    right = banded.select(
-        F.col("a_id").alias("b_id"),
-        *[F.col(f"a_s{b}").alias(f"b_s{b}") for b in range(bands)],
-        *([F.col(am).alias(bm)] if am else []), "band", "bsig")
     # UNORDERED candidate emission (a < b): cosine is bit-exactly
     # symmetric (see _score), so each pair's 64-dim dot product runs
     # ONCE and the edge mirrors afterward — half the verify CPU of
     # scoring both directions
-    cand_ids = (banded.join(right, ["band", "bsig"])
-                .filter(F.col("a_id") < F.col("b_id"))
-                .filter(_first_match_band(bands, am, bm))
-                .select("a_id", "b_id"))
-    cand_ids = _dense_spread(cand_ids, F.col("a_id"), F.col("b_id"))
+    base, cand_ids = _sketch_candidates(emb, id_col, vec_col, dim,
+                                        planes, bands)
     cand = (cand_ids
             .join(base.select(F.col("a_id").alias("query_id"),
                               F.col("v").alias("qv"),

@@ -53,36 +53,54 @@ def exact_dedup(docs: DataFrame, *, id_col: str = "doc_id",
                      (F.col(id_col) == F.col("keep_id")).alias("is_keeper")))
 
 
-def _first_match_band(bands: int, a_mask: str | None = None,
-                      b_mask: str | None = None):
-    """Predicate over a banded LSH self-join row: this row's band is
-    the FIRST of the `bands` per-band signature columns (a_s{j} vs
-    b_s{j}) where the two sides agree — the first EFFECTIVE band when
-    removal masks are given: a band j where either side was capped out
-    of its bucket (bit j of `a_mask`/`b_mask`, see
-    :func:`cap_hot_buckets`) could not have emitted the pair, so it
-    must not suppress emission from a later band where both survive.
-    Emitting a pair only from its first effective matching band is the
-    exactly-once invariant that replaces a global distinct over the
-    candidate stream — all-scalar CASE chain, stays inside whole-stage
-    codegen. Load-bearing for minhash, simhash AND embedding-LSH
-    candidate generation; change here, not inline."""
-    def _effective(j):
-        agree = F.col(f"a_s{j}") == F.col(f"b_s{j}")
-        if a_mask is None:
-            return agree
-        present = (F.shiftright(F.col(a_mask), j)
-                   .bitwiseOR(F.shiftright(F.col(b_mask), j))
-                   .bitwiseAND(F.lit(1)) == 0)
-        return agree & present
+def _band(sigd: DataFrame, bands: int, *cols, side: str = "a") -> DataFrame:
+    """The banded relation every LSH candidate join reads: one row per
+    (input row, band), keyed on `band` and `bsig` (that band's bucket,
+    column `s{band}` of `sigd`), carrying `cols` plus the row's whole
+    signature list as `{side}_s0 … {side}_s{bands-1}` — one scalar
+    per band, what :func:`_first_match_band` compares. The vectors and token
+    sets never travel through the candidate stream; they re-attach
+    after the candidates are final."""
+    return sigd.select(
+        *cols,
+        *[F.col(f"s{b}").alias(f"{side}_s{b}") for b in range(bands)],
+        F.posexplode(F.array(*[f"s{b}" for b in range(bands)]))
+        .alias("band", "bsig"))
 
+
+def _first_match_band(bands: int):
+    """Predicate over a banded LSH join row: this row's band is the
+    FIRST of the `bands` per-band signature columns (a_s{j} vs b_s{j})
+    where the two sides agree. Emitting a pair only from that band is
+    the exactly-once invariant that replaces a global distinct over
+    the candidate stream — an all-scalar CASE chain, stays inside
+    whole-stage codegen. It tests signature equality, not bucket
+    survival, which is what fixes the recall contract of a capped
+    join (see :func:`cap_hot_buckets`). Every banded join in dedup.py
+    and ann.py filters on it; change here, not inline."""
     pred = F.col("band") == 0
     for b in range(1, bands):
         earlier_none = F.lit(True)
         for j in range(b):
-            earlier_none = earlier_none & ~_effective(j)
+            earlier_none = earlier_none & ~(F.col(f"a_s{j}")
+                                            == F.col(f"b_s{j}"))
         pred = pred | ((F.col("band") == b) & earlier_none)
     return pred
+
+
+def _self_candidates(banded: DataFrame, bands: int, **renames) -> DataFrame:
+    """The banded self-join of a :func:`_band` relation keyed `a_id`:
+    rows sharing a (band, bsig) bucket, each unordered pair once
+    (a_id < b_id, first matching band). `renames` names the b-side
+    copy of each carried column (na="nb")."""
+    right = banded.select(
+        F.col("a_id").alias("b_id"),
+        *[F.col(a).alias(b) for a, b in renames.items()],
+        *[F.col(f"a_s{b}").alias(f"b_s{b}") for b in range(bands)],
+        "band", "bsig")
+    return (banded.join(right, ["band", "bsig"])
+            .filter(F.col("a_id") < F.col("b_id"))
+            .filter(_first_match_band(bands)))
 
 
 # Per-(band, bucket) survivor bound for every LSH candidate join. 512
@@ -92,44 +110,14 @@ def _first_match_band(bands: int, a_mask: str | None = None,
 # scale the cap NEVER binds and the SQL oracles stay cap-free.
 BUCKET_CAP = 512
 
-# Carry per-id removed-bands masks through every banded join so the
-# first-match filter never drops a pair that still has a surviving
-# band (the STRONG recall contract — see cap_hot_buckets). Default
-# False: on healthy corpora the cap never binds, the two contracts
-# coincide, and the mask machinery is pure overhead — measured
-# in-process (sf0.1, min-of-3, interleaved, broadcast-hinted masks):
-# minhash +0.80s (+27%), knn_graph +0.99s, embedding +0.46s,
-# incremental +0.85s, components +1.79s — the third pass over the
-# banded window (masks branch) plus the per-row mask probe. Flip True
-# for corpora where buckets genuinely exceed BUCKET_CAP and missed
-# recall matters more than ~25% extra candidate-stage cost; the
-# planted-pair pytest pins the True semantics
-# (test_capped_first_band_pair_recovers), and the planted-clique test
-# runs the full minhash pipeline under BOTH settings.
-CARRY_MASKS = False
-
-
-def _mask_cols(carry_masks: bool | None = None):
-    # None = "use the module default" — resolved at CALL time so the
-    # pytest monkeypatch of CARRY_MASKS keeps working; passing an
-    # explicit bool scopes the mode to one query instead of flipping
-    # every banded-join consumer process-wide (ADVICE r07).
-    if carry_masks is None:
-        carry_masks = CARRY_MASKS
-    return ("a_rm", "b_rm") if carry_masks else (None, None)
-
 
 def cap_hot_buckets(banded: DataFrame, id_col: str,
-                    keys: tuple[str, str] = ("band", "bsig"),
-                    cap: int = BUCKET_CAP,
-                    band_col: str = "band",
-                    mask_col: str | None = None,
-                    links: bool = False):
-    """Bound every LSH bucket to at most `cap` surviving rows — the
-    explicit skew guard for degenerate corpora (e.g. millions of
-    near-empty docs sharing one signature), where a single hot
-    (band, bucket) would otherwise make the candidate self-join
-    quadratic no matter how AQE splits it across tasks.
+                    cap: int = BUCKET_CAP, links: bool = False):
+    """Bound every (band, bsig) bucket of a :func:`_band` relation to
+    at most `cap` surviving rows — the explicit skew guard for
+    degenerate corpora (e.g. millions of near-empty docs sharing one
+    signature), where a single hot bucket would otherwise make the
+    candidate join quadratic no matter how AQE splits it across tasks.
 
     Survivors are the `cap` rows with the smallest xxhash64(id) —
     uniform over the bucket, deterministic, engine-independent. The
@@ -137,69 +125,35 @@ def cap_hot_buckets(banded: DataFrame, id_col: str,
     exchange is the same one the bucket join needs: the guard adds a
     per-bucket sort, never an extra shuffle.
 
-    With `links=True`, returns (kept, links) where links maps every
-    capped-out id to its first-capped bucket's rank-1 survivor (the
-    hub) — O(m) star candidates that keep a hot duplicate FAMILY
+    With `links=True`, returns (kept, numbered): `numbered` carries
+    every row's bucket rank `_bn`, from which :func:`_star_links`
+    builds O(m) star candidates that keep a hot duplicate FAMILY
     connected for keeper/component decisions after the cap removed
     its C(m,2) interior (measured need: the sf0.1 corpus has a
     ~2400-doc boilerplate family — half the corpus — whose members
     beyond the cap would otherwise silently become their own dedup
     keepers). Consumers exact-verify the links like any candidate.
 
-    With `mask_col`, the output additionally carries a per-id
-    removed-bands bitmask (bit j set ⇔ this id was capped OUT of its
-    band-j bucket), which :func:`_first_match_band` consumes so that a
-    band where either member was capped never suppresses emission from
-    a later band where both survive. The mask relation is built from
-    the REMOVED rows only — empty on any corpus below the cap, so its
-    broadcast re-attach join is cheap on the healthy path (though the
-    masks branch itself is a third pass over the bucket window — see
-    CARRY_MASKS for the measured cost and the default).
-
-    RECALL CONTRACT, binding only when a bucket exceeds `cap`. A pair
-    is emitted AT MOST once in every mode (capping only removes rows
-    before the first-match filter, so duplicate emission is
-    impossible). What can be MISSED depends on the mode the consumer
-    runs (all banded self/cross joins here follow CARRY_MASKS):
-
-    - WITHOUT masks (default): a pair is missed iff at least one
-      member was capped out of the FIRST band where the two
-      signatures agree. A later shared band where both members
-      survive does NOT recover the pair — the first-match filter
-      tests signature equality on the carried a_s*/b_s* columns, not
-      bucket survival, so recall in the above-cap regime is strictly
-      lower than the masked bound below.
-    - WITH masks (CARRY_MASKS=True): a pair is missed iff in EVERY
-      band where its two signatures agree, at least one member was
-      capped out of that band's bucket — the strongest bound a
-      per-bucket cap admits.
-
-    For a degenerate bucket of m identical-signature docs the two
-    modes coincide: every band keeps the SAME cap survivors (same
-    ids, same xxhash order), so the output is exactly C(cap, 2) pairs
-    instead of C(m, 2) — bounded work, bounded output,
-    connected-components downstream still links the survivors.
-    Property-tested with a planted hot band
-    (tests/test_operators.py::test_hot_bucket_cap*, run in BOTH
-    modes) and a planted first-band-capped pair that the masked mode
-    must re-emit from its second band
-    (test_capped_first_band_pair_recovers).
+    RECALL CONTRACT, binding only when a bucket exceeds `cap`: a pair
+    is missed iff at least one member was capped out of the FIRST band
+    where the two signatures agree. A later shared band where both
+    members survive does not recover it — the first-match filter
+    tests signature equality on the carried a_s*/b_s* columns, not
+    bucket survival. A pair is never emitted twice: capping only
+    removes rows before the first-match filter. For a degenerate
+    bucket of m identical-signature docs every band keeps the SAME
+    cap survivors (same ids, same xxhash order), so the output is
+    exactly C(cap, 2) pairs instead of C(m, 2) — bounded work, bounded
+    output. Property-tested with a planted hot band
+    (tests/test_operators.py::test_hot_bucket_cap*) and a planted pair
+    capped out of its first agreeing band
+    (test_capped_first_band_pair_is_missed).
     """
-    w = Window.partitionBy(*keys).orderBy(
+    w = Window.partitionBy("band", "bsig").orderBy(
         F.xxhash64(F.col(id_col)), F.col(id_col))
+    numbered = banded.withColumn("_bn", F.row_number().over(w))
     if links:
-        # STAR LINKS: every capped-out row still gets ONE candidate
-        # pair to its bucket's rank-1 survivor (the hub), from the
-        # first band it was capped in. O(m) extra candidates per hot
-        # bucket instead of the C(m,2) the cap removed — enough to
-        # keep a duplicate FAMILY connected for keeper/component
-        # decisions (the family's survivors are a clique, the hub is
-        # in it, every non-survivor hangs off the hub). The links are
-        # CANDIDATES: consumers still exact-verify them, so a
-        # non-duplicate that merely collided into a hot bucket never
-        # false-links.
-        #
-        # The r07 plan re-executed the k-hash signature stage per
+        # the r07 plan re-executed the k-hash signature stage per
         # consumer of `numbered` (ADVICE r07) — a LAZY localCheckpoint
         # computes it once on the first action and is ContextCleaner-
         # reclaimed on GC (unlike cacheManager-pinned persist), with
@@ -209,36 +163,105 @@ def cap_hot_buckets(banded: DataFrame, id_col: str,
         # 6.37s vs-join against 3.54s / 3.19s for this plan (r07:
         # 5.48s / 3.28s) — the probe's job barrier costs more than
         # the numbering sort it can skip, because the sort rides the
-        # bucket join's own exchange. On a healthy corpus the hub/
-        # removed/link branches below are empty filters over the one
-        # cached relation — near-free without any probe.
-        numbered = (banded.withColumn("_bn", F.row_number().over(w))
-                    .localCheckpoint(eager=False))
-        kept = numbered.filter(F.col("_bn") <= cap).drop("_bn")
-        hubs = numbered.filter(F.col("_bn") == 1).select(
-            *keys, F.col(id_col).alias("_hub"))
-        removed_rows = numbered.filter(F.col("_bn") > cap).select(
-            id_col, *keys)
-        lk = (removed_rows.join(hubs, list(keys))
-              .groupBy(id_col)
-              .agg(F.min_by("_hub", F.col(band_col)).alias("hub_id")))
-        return kept, lk
-    numbered = banded.withColumn("_bn", F.row_number().over(w))
+        # bucket join's own exchange. On a healthy corpus the star
+        # link branches are empty filters over the one cached
+        # relation — near-free without any probe.
+        numbered = numbered.localCheckpoint(eager=False)
     kept = numbered.filter(F.col("_bn") <= cap).drop("_bn")
-    if mask_col is None:
-        return kept
-    removed = numbered.filter(F.col("_bn") > cap)
-    masks = removed.groupBy(id_col).agg(
-        F.sum(F.expr(f"shiftleft(1L, {band_col})"))
-        .cast("long").alias(mask_col))
-    # explicit broadcast: hint-free planning stages a probe-side
-    # shuffle on id before AQE can see the (usually EMPTY) build side.
-    # Masks are one row per id capped out of SOME hot bucket — tiny on
-    # any corpus that isn't already pathological.
-    return (kept.join(F.broadcast(masks), id_col, "left")
-            .withColumn(mask_col,
-                        F.coalesce(F.col(mask_col),
-                                   F.lit(0).cast("long"))))
+    return (kept, numbered) if links else kept
+
+
+def _star_links(numbered: DataFrame, id_col: str, hubs: DataFrame,
+                hub_col: str, cap: int, out: str) -> DataFrame:
+    """STAR LINKS from two `cap_hot_buckets(links=True)` relations:
+    every id capped out of a bucket of `numbered` gets ONE candidate,
+    `out`, to the rank-1 survivor (the hub) of the same bucket in
+    `hubs`, from the first band it was capped in. O(m) extra
+    candidates per hot bucket instead of the C(m,2) the cap removed —
+    enough to keep a duplicate FAMILY connected (the family's
+    survivors are a clique, the hub is in it, every non-survivor
+    hangs off the hub). The links are CANDIDATES: consumers still
+    exact-verify them, so a non-duplicate that merely collided into a
+    hot bucket never false-links. The inner join gives an id whose
+    bucket has no hub no link."""
+    hub = hubs.filter(F.col("_bn") == 1).select(
+        "band", "bsig", F.col(hub_col).alias("_hub"))
+    return (numbered.filter(F.col("_bn") > cap)
+            .select(id_col, "band", "bsig")
+            .join(hub, ["band", "bsig"])
+            .groupBy(id_col)
+            .agg(F.min_by("_hub", F.col("band")).alias(out)))
+
+
+def _minhash_base(docs: DataFrame, id_col: str, text_col: str,
+                  side: str = "a") -> DataFrame:
+    """(`{side}_id`, toks, n) per non-empty document: the token sets
+    the MinHash signatures hash and the exact verify re-attaches."""
+    # spread the raw text BEFORE tokenizing: a single-row-group scan
+    # otherwise pipelines the whole token_set pass onto one core
+    base = spread_scan(docs).select(F.col(id_col).alias(f"{side}_id"),
+                                    token_set(text_col).alias("toks"))
+    base = base.withColumn("n", F.size("toks"))
+    # empty-token docs can never reach jaccard >= t (union 0 → 0.0);
+    # excluding them here also prevents the all-NULL-signature bucket
+    # from forming an O(m²) candidate clique of empty docs
+    base = base.filter(F.col("n") > 0)
+    # spread the k-way md5 signature work across the cluster: the raw
+    # document scan often has far fewer input splits than cores, and
+    # everything downstream (banding, bucket join, verify) inherits
+    # its parallelism otherwise
+    return _dense_spread(base, F.col(f"{side}_id"))
+
+
+def _minhash_band(base: DataFrame, num_hashes: int, bands: int,
+                  side: str = "a") -> DataFrame:
+    """The banded MinHash relation of a :func:`_minhash_base`:
+    `{side}_id`, `n{side}` and the per-band slice hashes."""
+    if num_hashes % bands:
+        # trailing hashes would be silently dropped, weakening recall —
+        # and the generated DuckDB oracle assumes exact divisibility
+        raise ValueError(
+            f"bands={bands} must divide num_hashes={num_hashes}")
+    rows_per_band = num_hashes // bands
+    idc = f"{side}_id"
+    sig = base.select(idc, F.col("n"),
+                      minhash_signature(F.col("toks"),
+                                        k=num_hashes).alias("sig"))
+    # per-band bucket key = xxhash64 of the band's hash slice: an
+    # 8-byte join key with scalar (whole-stage-codegen) comparisons —
+    # string concat keys and higher-order array filters dominate the
+    # candidate join's hot loop otherwise. A hash collision could only
+    # ADD a candidate (~2^-64/pair), which the exact-Jaccard verify
+    # then removes — output unchanged.
+    slice_hash = [
+        F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
+                     for r in range(rows_per_band)]).alias(f"s{b}")
+        for b in range(bands)]
+    return _band(sig.select(idc, "n", *slice_hash), bands,
+                 idc, F.col("n").alias(f"n{side}"), side=side)
+
+
+def _jaccard_verify(cand_ids: DataFrame, abase: DataFrame,
+                    bbase: DataFrame, threshold: float) -> DataFrame:
+    """Exact token-set Jaccard over candidate (a_id, b_id) pairs:
+    token sets re-attach from `abase` (keyed a_id) and `bbase` (keyed
+    b_id); returns (a_id, b_id, jaccard) at or above `threshold`."""
+    # spread the verify stage: without an exchange here the whole
+    # pipeline inherits the document scan's (few) input partitions and
+    # the O(pairs × tokens) exact verify runs near-serial. Shuffles
+    # only the bare id pairs, already first-match-deduped — the
+    # cheapest possible redistribution point
+    cand_ids = _dense_spread(cand_ids, F.col("a_id"), F.col("b_id"))
+    cand = (cand_ids
+            .join(abase.select("a_id", F.col("toks").alias("atoks"),
+                               F.col("n").alias("na")), "a_id")
+            .join(bbase.select("b_id", F.col("toks").alias("btoks"),
+                               F.col("n").alias("nb")), "b_id"))
+    union = F.size(F.array_union("atoks", "btoks")).cast("double")
+    inter = (F.col("na") + F.col("nb")).cast("double") - union
+    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    return (cand.withColumn("jaccard", F.round(jac, 6))
+                .filter(F.col("jaccard") >= threshold))
 
 
 def minhash_lsh_pairs(docs: DataFrame, *, id_col: str = "doc_id",
@@ -246,8 +269,7 @@ def minhash_lsh_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                       bands: int = 4,
                       jaccard_threshold: float = 0.9,
                       bucket_cap: int = BUCKET_CAP,
-                      link_capped: bool = False,
-                      carry_masks: bool | None = None) -> DataFrame:
+                      link_capped: bool = False) -> DataFrame:
     """MinHash + banded LSH candidate pairs, verified with exact
     token-set Jaccard. Hot buckets are bounded to `bucket_cap`
     survivors (see :func:`cap_hot_buckets` for the recall contract —
@@ -287,62 +309,15 @@ def minhash_lsh_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     via two joins against the one-row-per-doc base relation (small →
     AQE broadcasts them).
     """
-    if num_hashes % bands:
-        # trailing hashes would be silently dropped, weakening recall —
-        # and the generated DuckDB oracle assumes exact divisibility
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes}")
-    rows_per_band = num_hashes // bands
-    # spread the raw text BEFORE tokenizing: a single-row-group scan
-    # otherwise pipelines the whole token_set pass onto one core
-    base = spread_scan(docs).select(F.col(id_col).alias("a_id"),
-                                    token_set(text_col).alias("toks"))
-    base = base.withColumn("n", F.size("toks"))
-    # empty-token docs can never reach jaccard >= t (union 0 → 0.0);
-    # excluding them here also prevents the all-NULL-signature bucket
-    # from forming an O(m²) candidate clique of empty docs
-    base = base.filter(F.col("n") > 0)
-    # spread the k-way md5 signature work across the cluster: the raw
-    # document scan often has far fewer input splits than cores, and
-    # everything downstream (banding, bucket join, verify) inherits
-    # its parallelism otherwise
-    base = _dense_spread(base, F.col("a_id"))
-    sig = base.select("a_id", F.col("n"),
-                      minhash_signature(F.col("toks"),
-                                        k=num_hashes).alias("sig"))
-    # per-band bucket key = xxhash64 of the band's hash slice: an
-    # 8-byte join key with scalar (whole-stage-codegen) comparisons —
-    # string concat keys and higher-order array filters dominate the
-    # candidate join's hot loop otherwise. A hash collision could only
-    # ADD a candidate (~2^-64/pair), which the exact-Jaccard verify
-    # then removes — output unchanged.
-    slice_hash = [
-        F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                     for r in range(rows_per_band)]).alias(f"s{b}")
-        for b in range(bands)]
-    sigd = sig.select("a_id", "n", *slice_hash)
-    banded = sigd.select(
-        "a_id", F.col("n").alias("na"),
-        *[F.col(f"s{b}").alias(f"a_s{b}") for b in range(bands)],
-        F.posexplode(F.array(*[f"s{b}" for b in range(bands)]))
-        .alias("band", "bsig"))
-    am, bm = _mask_cols(carry_masks)
+    base = _minhash_base(docs, id_col, text_col)
+    banded = _minhash_band(base, num_hashes, bands)
     if link_capped:
-        banded, lk = cap_hot_buckets(banded, "a_id", cap=bucket_cap,
-                                     links=True)
-        am = bm = None
+        banded, numbered = cap_hot_buckets(banded, "a_id", cap=bucket_cap,
+                                           links=True)
     else:
-        banded = cap_hot_buckets(banded, "a_id", cap=bucket_cap,
-                                 mask_col=am)
-    right = banded.select(
-        F.col("a_id").alias("b_id"), F.col("na").alias("nb"),
-        *[F.col(f"a_s{b}").alias(f"b_s{b}") for b in range(bands)],
-        *([F.col(am).alias(bm)] if am else []), "band", "bsig")
+        banded = cap_hot_buckets(banded, "a_id", cap=bucket_cap)
     t = jaccard_threshold
-    cand_ids = (banded.join(right, ["band", "bsig"])
-                .filter(F.col("a_id") < F.col("b_id"))
-                # exactly-once pair emission (no global distinct)
-                .filter(_first_match_band(bands, am, bm))
+    cand_ids = (_self_candidates(banded, bands, na="nb")
                 # size-ratio block applied before anything
                 # materializes: implied by jaccard >= t, so it only
                 # drops pairs that could never pass
@@ -350,38 +325,20 @@ def minhash_lsh_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                         & (F.col("nb") * t <= F.col("na")))
                 .select("a_id", "b_id"))
     if link_capped:
-        # star candidates for capped-out docs (see cap_hot_buckets
-        # links contract). Ordered like the main stream; they skip
-        # the size-ratio pre-filter (the exact verify below decides)
-        # and may duplicate a main-stream pair when a doc survives
-        # some band — harmless for the component/keeper consumers
-        # this mode exists for. On a healthy corpus lk is an empty
-        # filter over the one cached numbered relation — near-free.
-        link_ids = lk.select(
-            F.least(F.col("a_id"), F.col("hub_id")).alias("la"),
-            F.greatest(F.col("a_id"), F.col("hub_id")).alias("lb"))
-        cand_ids = cand_ids.unionByName(
-            link_ids.select(F.col("la").alias("a_id"),
-                            F.col("lb").alias("b_id")))
-    # spread the verify stage: without an exchange here the whole
-    # pipeline inherits the document scan's (few) input partitions and
-    # the O(pairs × tokens) exact verify runs near-serial. Shuffles
-    # only the bare id pairs, already first-match-deduped — the
-    # cheapest possible redistribution point
-    cand_ids = _dense_spread(cand_ids, F.col("a_id"), F.col("b_id"))
-    cand = (cand_ids
-            .join(base.select("a_id", F.col("toks").alias("atoks"),
-                              F.col("n").alias("na")), "a_id")
-            .join(base.select(F.col("a_id").alias("b_id"),
-                              F.col("toks").alias("btoks"),
-                              F.col("n").alias("nb")), "b_id"))
-    union = F.size(F.array_union("atoks", "btoks")).cast("double")
-    inter = (F.col("na") + F.col("nb")).cast("double") - union
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (cand.withColumn("jaccard", F.round(jac, 6))
-                .filter(F.col("jaccard") >= jaccard_threshold)
-                .select(F.col("a_id").alias("doc_a"),
-                        F.col("b_id").alias("doc_b"), "jaccard"))
+        # star candidates for capped-out docs, ordered like the main
+        # stream; they skip the size-ratio pre-filter (the exact
+        # verify decides) and may duplicate a main-stream pair when a
+        # doc survives some band — harmless for the component/keeper
+        # consumers this mode exists for
+        lk = _star_links(numbered, "a_id", numbered, "a_id", bucket_cap,
+                         "hub_id")
+        cand_ids = cand_ids.unionByName(lk.select(
+            F.least("a_id", "hub_id").alias("a_id"),
+            F.greatest("a_id", "hub_id").alias("b_id")))
+    return (_jaccard_verify(cand_ids, base,
+                            base.withColumnRenamed("a_id", "b_id"), t)
+            .select(F.col("a_id").alias("doc_a"),
+                    F.col("b_id").alias("doc_b"), "jaccard"))
 
 
 def simhash(docs: DataFrame, *, id_col: str = "doc_id",
@@ -423,8 +380,7 @@ def simhash(docs: DataFrame, *, id_col: str = "doc_id",
 def simhash_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                   text_col: str = "text", bits: int = 32,
                   bands: int = 4, max_hamming: int = 3,
-                  bucket_cap: int = BUCKET_CAP,
-                  carry_masks: bool | None = None) -> DataFrame:
+                  bucket_cap: int = BUCKET_CAP) -> DataFrame:
     """Near-dup candidate pairs from SimHash + hamming bands.
 
     Pigeonhole: two hashes within hamming distance `bands - 1` must
@@ -442,22 +398,9 @@ def simhash_pairs(docs: DataFrame, *, id_col: str = "doc_id",
              .alias(f"s{b}") for b in range(bands)]
     sigd = sh.select(F.col(id_col).alias("a_id"),
                      F.col("simhash").alias("ah"), *bvals)
-    banded = sigd.select(
-        "a_id", "ah",
-        *[F.col(f"s{b}").alias(f"a_s{b}") for b in range(bands)],
-        F.posexplode(F.array(*[f"s{b}" for b in range(bands)]))
-        .alias("band", "bval"))
-    am, bm = _mask_cols(carry_masks)
-    banded = cap_hot_buckets(banded, "a_id", keys=("band", "bval"),
-                             cap=bucket_cap, mask_col=am)
-    right = banded.select(
-        F.col("a_id").alias("b_id"), F.col("ah").alias("bh"),
-        *[F.col(f"a_s{b}").alias(f"b_s{b}") for b in range(bands)],
-        *([F.col(am).alias(bm)] if am else []), "band", "bval")
-    cand = (banded.join(right, ["band", "bval"])
-            .filter(F.col("a_id") < F.col("b_id"))
-            # exactly-once pair emission (no global dropDuplicates)
-            .filter(_first_match_band(bands, am, bm))
+    banded = cap_hot_buckets(_band(sigd, bands, "a_id", "ah"), "a_id",
+                             cap=bucket_cap)
+    cand = (_self_candidates(banded, bands, ah="bh")
             .select("a_id", "b_id", "ah", "bh"))
     ham = F.bit_count(F.col("ah").bitwiseXOR(F.col("bh")))
     return (cand.withColumn("hamming", ham)
@@ -708,6 +651,32 @@ def connected_components(pairs: DataFrame, *, src: str = "doc_a",
 
 
 
+def _sketch_candidates(emb: DataFrame, id_col: str, vec_col: str,
+                       dim: int, planes: int, bands: int):
+    """Random-hyperplane LSH candidates over one embedding relation
+    (operators/ann.py sketches: deterministic hash-derived planes, so
+    every consumer stays SQL-oracle-checkable with the same inlined
+    plane constants). Returns (base, cand_ids): base is (a_id, v,
+    norm) per vector; cand_ids is every unordered pair (a_id < b_id)
+    sharing a `planes`-bit sketch bucket in ANY of `bands` bands,
+    spread for the CPU-dense verify (see _dense_spread)."""
+    from .ann import sketch
+
+    v = F.col(vec_col).cast("array<double>")
+    # bands × planes × dim sketch arithmetic per vector — spread past
+    # a one-split scan before any of it runs
+    base = spread_scan(emb).select(F.col(id_col).alias("a_id"),
+                                   v.alias("v"))
+    base = base.withColumn("norm", F.sqrt(_vec_dot(F.col("v"),
+                                                   F.col("v"))))
+    svals = [sketch(F.col("v"), dim, planes, offset=b * planes)
+             .alias(f"s{b}") for b in range(bands)]
+    banded = cap_hot_buckets(_band(base.select("a_id", *svals), bands,
+                                   "a_id"), "a_id")
+    cand_ids = _self_candidates(banded, bands).select("a_id", "b_id")
+    return base, _dense_spread(cand_ids, F.col("a_id"), F.col("b_id"))
+
+
 def embedding_neighbor_stats(emb: DataFrame, *, id_col: str = "vec_id",
                              vec_col: str = "embedding",
                              threshold: float = 0.45) -> DataFrame:
@@ -741,65 +710,28 @@ def embedding_neighbor_stats_lsh(emb: DataFrame, *,
                                  vec_col: str = "embedding",
                                  threshold: float = 0.45,
                                  dim: int = 64, planes: int = 4,
-                                 bands: int = 8,
-                                 carry_masks: bool | None = None
-                                 ) -> DataFrame:
+                                 bands: int = 8) -> DataFrame:
     """LSH-bucketed per-vector near-duplicate stats — the 100 TB path.
 
     Candidates are pairs sharing a random-hyperplane sketch bucket in
-    ANY of `bands` independent bands (operators/ann.py machinery:
-    deterministic hash-derived planes, so the full pipeline is
-    SQL-oracle-checkable with the same inlined plane constants). The
-    bucket join shuffles (band, bucket)-keyed rows; each banded row
-    carries the full per-band bucket list (bands × 4 B) so a pair is
-    emitted only from its FIRST matching band (_first_match_band) —
-    exactly-once without the global distinct() shuffle the naive
-    join-then-dedup needs. Vectors re-attach AFTERWARDS (the
-    minhash_lsh_pairs lesson: never push array payloads through the
-    candidate stream). Stats then aggregate exactly over the
-    candidate set.
+    ANY of `bands` independent bands (:func:`_sketch_candidates`),
+    each emitted once from its first matching band. Vectors re-attach
+    AFTERWARDS (the minhash_lsh_pairs lesson: never push array
+    payloads through the candidate stream). Stats then aggregate
+    exactly over the candidate set.
 
     Recall vs the exact :func:`embedding_neighbor_stats` is
     pytest-gated; per-pair candidate probability at cosine c is
     1-(1-(1-acos(c)/pi)^planes)^bands (~0.8 at c=0.45, higher for
     nearer duplicates).
     """
-    from .ann import sketch
-
-    v = F.col(vec_col).cast("array<double>")
-    # bands × planes × dim sketch arithmetic per vector — spread past
-    # a one-split scan before any of it runs
-    base = spread_scan(emb).select(F.col(id_col).alias("a_id"),
-                                   v.alias("v"))
-    base = base.withColumn("norm", F.sqrt(_vec_dot(F.col("v"),
-                                                   F.col("v"))))
-    svals = [sketch(F.col("v"), dim, planes, offset=b * planes)
-             .alias(f"s{b}") for b in range(bands)]
-    sigd = base.select("a_id", *svals)
-    banded = sigd.select(
-        "a_id",
-        *[F.col(f"s{b}").alias(f"a_s{b}") for b in range(bands)],
-        F.posexplode(F.array(*[f"s{b}" for b in range(bands)]))
-        .alias("band", "bsig"))
-    am, bm = _mask_cols(carry_masks)
-    banded = cap_hot_buckets(banded, "a_id", mask_col=am)
-    right = banded.select(
-        F.col("a_id").alias("b_id"),
-        *[F.col(f"a_s{b}").alias(f"b_s{b}") for b in range(bands)],
-        *([F.col(am).alias(bm)] if am else []), "band", "bsig")
-    # exactly-once UNORDERED emission (a < b, first effective matching
-    # band, no global distinct): cosine is bit-exactly symmetric
-    # (per-element multiplies commute, shared fold order, an·bn
-    # commutes), so each pair's dot product runs ONCE and both
-    # endpoints' stats read the mirrored row — half the verify CPU of
-    # per-direction scoring
-    cand_ids = (banded.join(right, ["band", "bsig"])
-                .filter(F.col("a_id") < F.col("b_id"))
-                .filter(_first_match_band(bands, am, bm))
-                .select("a_id", "b_id"))
-    # the candidate verify (64-dim dot product per pair) is CPU-dense
-    # over byte-small rows — see _dense_spread
-    cand_ids = _dense_spread(cand_ids, F.col("a_id"), F.col("b_id"))
+    # exactly-once UNORDERED emission (a < b, no global distinct):
+    # cosine is bit-exactly symmetric (per-element multiplies commute,
+    # shared fold order, an·bn commutes), so each pair's dot product
+    # runs ONCE and both endpoints' stats read the mirrored row — half
+    # the verify CPU of per-direction scoring
+    base, cand_ids = _sketch_candidates(emb, id_col, vec_col, dim,
+                                        planes, bands)
     cand = (cand_ids
             .join(base.select("a_id", F.col("v").alias("av"),
                               F.col("norm").alias("an")), "a_id")
@@ -935,8 +867,7 @@ def minhash_lsh_pairs_vs(left: DataFrame, right: DataFrame, *,
                          num_hashes: int = 16, bands: int = 4,
                          jaccard_threshold: float = 0.9,
                          bucket_cap: int = BUCKET_CAP,
-                         link_capped: bool = False,
-                         carry_masks: bool | None = None) -> DataFrame:
+                         link_capped: bool = False) -> DataFrame:
     """Cross-relation MinHash LSH: candidate pairs between a LEFT
     relation (e.g. a newly arrived batch) and a RIGHT relation (e.g.
     the historical corpus) — the join an incremental ingest pipeline
@@ -954,40 +885,12 @@ def minhash_lsh_pairs_vs(left: DataFrame, right: DataFrame, *,
 
     Returns (left_id, right_id, jaccard).
     """
-    if num_hashes % bands:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes}")
-    rows_per_band = num_hashes // bands
-
-    def _prep(df: DataFrame, tag: str) -> DataFrame:
-        base = spread_scan(df).select(F.col(id_col).alias(f"{tag}_id"),
-                                      token_set(text_col).alias("toks"))
-        base = base.withColumn("n", F.size("toks"))
-        # empty docs can never reach jaccard >= t; excluding them also
-        # kills the all-NULL-signature bucket (see minhash_lsh_pairs)
-        base = base.filter(F.col("n") > 0)
-        return _dense_spread(base, F.col(f"{tag}_id"))
-
-    lbase, rbase = _prep(left, "a"), _prep(right, "b")
-
-    def _banded(base: DataFrame, tag: str) -> DataFrame:
-        sig = base.select(f"{tag}_id", "n",
-                          minhash_signature(F.col("toks"),
-                                            k=num_hashes).alias("sig"))
-        slice_hash = [
-            F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                         for r in range(rows_per_band)]).alias(f"s{b}")
-            for b in range(bands)]
-        sigd = sig.select(f"{tag}_id", "n", *slice_hash)
-        return sigd.select(
-            f"{tag}_id", F.col("n").alias(f"n{tag}"),
-            *[F.col(f"s{b}").alias(f"{tag}_s{b}") for b in range(bands)],
-            F.posexplode(F.array(*[f"s{b}" for b in range(bands)]))
-            .alias("band", "bsig"))
-
+    lbase = _minhash_base(left, id_col, text_col, "a")
+    rbase = _minhash_base(right, id_col, text_col, "b")
+    lband = _minhash_band(lbase, num_hashes, bands, "a")
+    rband = _minhash_band(rbase, num_hashes, bands, "b")
     # cap each side's hot buckets independently (worst-bucket fanout
     # ≤ cap² even when BOTH relations pile onto one signature)
-    am, bm = _mask_cols(carry_masks)
     link_ids = None
     if link_capped:
         # cross-relation star links: a LEFT (batch) doc capped out of
@@ -996,69 +899,31 @@ def minhash_lsh_pairs_vs(left: DataFrame, right: DataFrame, *,
         # doc inside a >cap family would come back is_new even though
         # its duplicates fill the history bucket. (A capped-out RIGHT
         # doc needs no link: it is only a match target, and the
-        # bucket's `cap` history survivors already represent it.)
-        #
-        # Both numbered banded relations checkpoint LAZILY: computed
-        # once on the first action, ContextCleaner-reclaimed on GC —
-        # the r07 persists leaked for the session lifetime (ADVICE
-        # r07). VERDICT r07 #2's per-side driver probe was built and
-        # A/B-rejected in-process (sf0.1, min-of-3, interleaved):
-        # probe design 6.37s vs 3.19s for this plan on the
-        # incremental join (r07 persist: 3.28s) — two probe job
-        # barriers serialize the pipeline for a sort the join's own
-        # exchange already pays for. The history side being
-        # materialized is the documented scale design anyway (a real
-        # deployment maintains it as a table across cycles); the
-        # batch side is per-cycle small by definition.
-        am = bm = None
-
-        def _cap_side(ban: DataFrame, idc: str):
-            w = Window.partitionBy("band", "bsig").orderBy(
-                F.xxhash64(F.col(idc)), F.col(idc))
-            num = (ban.withColumn("_bn", F.row_number().over(w))
-                   .localCheckpoint(eager=False))
-            return num.filter(F.col("_bn") <= bucket_cap).drop("_bn"), num
-
-        lb, lnum = _cap_side(_banded(lbase, "a"), "a_id")
-        rb, rnum = _cap_side(_banded(rbase, "b"), "b_id")
-        # history hubs for the buckets holding capped-out batch docs.
-        # Inner join ⇒ a capped batch doc whose bucket has no history
-        # rows gets no link (and correctly stays is_new unless
-        # another band matches it).
-        rhubs = rnum.filter(F.col("_bn") == 1).select(
-            "band", "bsig", F.col("b_id").alias("_hub"))
-        lrm = (lnum.filter(F.col("_bn") > bucket_cap)
-               .select("a_id", "band", "bsig"))
-        link_ids = (lrm.join(rhubs, ["band", "bsig"])
-                    .groupBy("a_id")
-                    .agg(F.min_by("_hub", F.col("band"))
-                         .alias("b_id")))
+        # bucket's `cap` history survivors already represent it.) The
+        # history side being materialized is the documented scale
+        # design anyway (a real deployment maintains it as a table
+        # across cycles); the batch side is per-cycle small by
+        # definition.
+        lb, lnum = cap_hot_buckets(lband, "a_id", cap=bucket_cap,
+                                   links=True)
+        rb, rnum = cap_hot_buckets(rband, "b_id", cap=bucket_cap,
+                                   links=True)
+        link_ids = _star_links(lnum, "a_id", rnum, "b_id", bucket_cap,
+                               "b_id")
     else:
-        lb = cap_hot_buckets(_banded(lbase, "a"), "a_id",
-                             cap=bucket_cap, mask_col=am)
-        rb = cap_hot_buckets(_banded(rbase, "b"), "b_id",
-                             cap=bucket_cap, mask_col=bm)
+        lb = cap_hot_buckets(lband, "a_id", cap=bucket_cap)
+        rb = cap_hot_buckets(rband, "b_id", cap=bucket_cap)
     t = jaccard_threshold
     cand_ids = (lb.join(rb, ["band", "bsig"])
-                .filter(_first_match_band(bands, am, bm))
+                .filter(_first_match_band(bands))
                 .filter((F.col("na") * t <= F.col("nb"))
                         & (F.col("nb") * t <= F.col("na")))
                 .select("a_id", "b_id"))
     if link_ids is not None:
         cand_ids = cand_ids.unionByName(link_ids)
-    cand_ids = _dense_spread(cand_ids, F.col("a_id"), F.col("b_id"))
-    cand = (cand_ids
-            .join(lbase.select("a_id", F.col("toks").alias("atoks"),
-                               F.col("n").alias("na")), "a_id")
-            .join(rbase.select("b_id", F.col("toks").alias("btoks"),
-                               F.col("n").alias("nb")), "b_id"))
-    union = F.size(F.array_union("atoks", "btoks")).cast("double")
-    inter = (F.col("na") + F.col("nb")).cast("double") - union
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (cand.withColumn("jaccard", F.round(jac, 6))
-                .filter(F.col("jaccard") >= jaccard_threshold)
-                .select(F.col("a_id").alias("left_id"),
-                        F.col("b_id").alias("right_id"), "jaccard"))
+    return (_jaccard_verify(cand_ids, lbase, rbase, t)
+            .select(F.col("a_id").alias("left_id"),
+                    F.col("b_id").alias("right_id"), "jaccard"))
 
 
 def incremental_dedup(batch: DataFrame, history: DataFrame, *,

@@ -266,7 +266,7 @@ def _sql_simhash_pairs(bits: int = 32, bands: int = 4,
     sim = _sql_simhash(bits)
     band_rows = "\n  UNION ALL\n".join(
         f"  SELECT doc_id, simhash, {b} AS band, "
-        f"(simhash >> {b * width}) & {mask} AS bval FROM sim"
+        f"(simhash >> {b * width}) & {mask} AS bsig FROM sim"
         for b in range(bands))
     return f"""
 WITH sim AS ({sim}
@@ -276,7 +276,7 @@ WITH sim AS ({sim}
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
          a.simhash AS ah, b.simhash AS bh
   FROM banded a JOIN banded b
-    ON a.band = b.band AND a.bval = b.bval AND a.doc_id < b.doc_id
+    ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id
 )
 SELECT doc_a, doc_b,
        CAST(bit_count(xor(ah, bh)) AS INT) AS hamming

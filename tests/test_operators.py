@@ -1388,8 +1388,6 @@ def test_hot_bucket_cap_bounds_planted_clique(spark):
     from coinbase_data_pipeline_spark.operators.dedup import (
         minhash_lsh_pairs, simhash_pairs)
 
-    import coinbase_data_pipeline_spark.operators.dedup as DD
-
     n, cap = 400, 20
     docs = spark.createDataFrame(
         [(i, "the exact same boilerplate template text body")
@@ -1404,18 +1402,6 @@ def test_hot_bucket_cap_bounds_planted_clique(spark):
     again = minhash_lsh_pairs(docs, bucket_cap=cap).collect()
     ids2 = {r.doc_a for r in again} | {r.doc_b for r in again}
     assert ids2 == ids
-    # the strong-recall mask mode must produce the identical clique
-    # output (identical-signature docs share one survivor set across
-    # all bands, so the two contracts coincide) — this exercises the
-    # mask plumbing end-to-end through a real consumer
-    saved = DD.CARRY_MASKS
-    try:
-        DD.CARRY_MASKS = True
-        masked = minhash_lsh_pairs(docs, bucket_cap=cap).collect()
-    finally:
-        DD.CARRY_MASKS = saved
-    assert {(r.doc_a, r.doc_b) for r in masked} == \
-        {(r.doc_a, r.doc_b) for r in pairs}
 
     sp = simhash_pairs(docs, bucket_cap=cap).collect()
     assert len(sp) == cap * (cap - 1) // 2
@@ -1592,19 +1578,18 @@ def test_holt_sweep_picks_high_beta_on_planted_trend(spark):
     assert best[0]["beta"] == max(betas)
 
 
-def test_capped_first_band_pair_recovers(spark):
-    """The round-7 recall contract (ADVICE r06): a pair capped out of
-    the FIRST band where its signatures agree must still be emitted
-    from a later band where BOTH members survive. Synthetic banded
-    relation, bands=2: pair P0/P1 agree in both bands; a 60-doc flood
-    shares only their band-0 bucket, so with cap=4 at least one of
-    P0/P1 is (almost surely, and deterministically for this id set)
-    capped out of band 0 — without the removal masks the pair is lost;
-    with them it re-emits from band 1, exactly once."""
-    from pyspark.sql import functions as F
+def test_capped_first_band_pair_is_missed(spark):
+    """The cap's recall contract: a pair is missed iff a member was
+    capped out of the FIRST band where the two signatures agree — a
+    later agreeing band where both survive does not recover it — and
+    no pair is ever emitted twice. Synthetic banded relation, bands=2:
+    pair P0/P1 agree in both bands; a 60-doc flood shares only their
+    band-0 bucket, so with cap=4 the xxhash order for this id set caps
+    P0/P1 out of band 0 while band 1's 2-row bucket keeps both."""
+    from collections import Counter
 
     from coinbase_data_pipeline_spark.operators.dedup import (
-        _first_match_band, cap_hot_buckets)
+        _self_candidates, cap_hot_buckets)
 
     bands, cap = 2, 4
     rows = []
@@ -1620,33 +1605,54 @@ def test_capped_first_band_pair_recovers(spark):
     banded = spark.createDataFrame(
         rows, "a_id long, a_s0 long, a_s1 long, band int, bsig long")
 
-    capped = cap_hot_buckets(banded, "a_id", cap=cap, mask_col="a_rm")
-    # precondition for a meaningful test: at least one pair member was
-    # capped out of band 0 (the bucket holds 62 ids and cap=4; the
-    # xxhash order for this id set caps both 1000 and 1001 out)
-    masks = {r["a_id"]: r["a_rm"] for r in
-             capped.select("a_id", "a_rm").distinct().collect()}
-    assert masks[1000] & 1 or masks[1001] & 1
+    capped = cap_hot_buckets(banded, "a_id", cap=cap)
+    kept = {(r["a_id"], r["band"]) for r in capped.collect()}
+    # precondition for a meaningful test: a pair member was capped out
+    # of band 0 and both survive band 1
+    assert (1000, 0) not in kept or (1001, 0) not in kept
+    assert {(1000, 1), (1001, 1)} <= kept
+    assert sum(band == 0 for _, band in kept) == cap
 
-    right = capped.select(
-        F.col("a_id").alias("b_id"),
-        *[F.col(f"a_s{b}").alias(f"b_s{b}") for b in range(bands)],
-        F.col("a_rm").alias("b_rm"), "band", "bsig")
-    pairs = (capped.join(right, ["band", "bsig"])
-             .filter(F.col("a_id") < F.col("b_id"))
-             .filter(_first_match_band(bands, "a_rm", "b_rm"))
-             .select("a_id", "b_id").collect())
-    hits = [r for r in pairs if (r["a_id"], r["b_id"]) == (1000, 1001)]
-    assert len(hits) == 1, (
-        f"pair must be emitted exactly once via band 1, got {len(hits)}")
-    # and the maskless predicate demonstrates the OLD defect: the
-    # band-0 agreement suppresses the band-1 emission
-    old = (capped.join(right, ["band", "bsig"])
-           .filter(F.col("a_id") < F.col("b_id"))
-           .filter(_first_match_band(bands))
-           .select("a_id", "b_id").collect())
-    assert not [r for r in old
-                if (r["a_id"], r["b_id"]) == (1000, 1001)]
+    pairs = Counter((r["a_id"], r["b_id"]) for r in
+                    _self_candidates(capped, bands).collect())
+    assert (1000, 1001) not in pairs
+    assert pairs and max(pairs.values()) == 1
+    # and without the cap the same relation does emit it, once
+    uncapped = Counter((r["a_id"], r["b_id"]) for r in
+                       _self_candidates(banded, bands).collect())
+    assert uncapped[(1000, 1001)] == 1
+    assert max(uncapped.values()) == 1
+
+
+def test_self_candidates_match_bruteforce_bucket_sharing(spark):
+    """`_self_candidates` on a banded relation below the cap must equal
+    the brute-force set {a < b sharing >= 1 (band, bucket)}, each pair
+    exactly once. Synthetic signatures over a tiny bucket alphabet, so
+    pairs share every count of buckets from 1 to `bands`."""
+    import random
+    from collections import Counter
+    from itertools import combinations
+
+    from coinbase_data_pipeline_spark.operators.dedup import (
+        _self_candidates, cap_hot_buckets)
+
+    bands, n = 4, 60
+    rng = random.Random(5)
+    sigs = {i: [rng.randrange(3) for _ in range(bands)] for i in range(n)}
+    banded = spark.createDataFrame(
+        [(i, *s, b, s[b]) for i, s in sigs.items() for b in range(bands)],
+        "a_id long, a_s0 long, a_s1 long, a_s2 long, a_s3 long, "
+        "band int, bsig long")
+    got = Counter((r["a_id"], r["b_id"]) for r in _self_candidates(
+        cap_hot_buckets(banded, "a_id"), bands).collect())
+
+    shared = {(a, b): sum(x == y for x, y in zip(sigs[a], sigs[b]))
+              for a, b in combinations(range(n), 2)}
+    want = {p for p, k in shared.items() if k >= 1}
+    # non-vacuous: every sharing count 1..bands occurs
+    assert set(shared.values()) >= set(range(1, bands + 1))
+    assert set(got) == want
+    assert max(got.values()) == 1
 
 
 def test_star_links_keep_capped_family_connected(spark):
@@ -1796,48 +1802,6 @@ def test_predict_single_step_matches_model_score_h1(spark):
             == r["predicted_price"]
 
 
-def test_mask_mode_parity_on_real_corpus(spark):
-    """CARRY_MASKS=True must be RESULT-identical to the default on any
-    corpus below the bucket cap (the two recall contracts coincide —
-    the mode only pays for stronger recall ABOVE the cap). Pinned on
-    the real sf0.001 corpus for the two consumers with the most
-    band-filter surface, beyond the planted-clique tests."""
-    import coinbase_data_pipeline_spark.operators.dedup as DD
-    from coinbase_data_pipeline_spark.operators.ann import (
-        knn_graph, lsh_topk)
-    from coinbase_data_pipeline_spark.operators.dedup import (
-        minhash_lsh_pairs)
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 10)   # the ann_lsh shape
-    base_pairs = {(r.doc_a, r.doc_b, r.jaccard)
-                  for r in minhash_lsh_pairs(docs).collect()}
-    base_knn = {(r.vec_id, r.nn_id, r.rank)
-                for r in knn_graph(emb).collect()}
-    base_topk = {(r.query_id, r.nn_id, r.rank)
-                 for r in lsh_topk(emb, queries).collect()}
-    saved = DD.CARRY_MASKS
-    try:
-        DD.CARRY_MASKS = True
-        masked_pairs = {(r.doc_a, r.doc_b, r.jaccard)
-                        for r in minhash_lsh_pairs(docs).collect()}
-        masked_knn = {(r.vec_id, r.nn_id, r.rank)
-                      for r in knn_graph(emb).collect()}
-        masked_topk = {(r.query_id, r.nn_id, r.rank)
-                       for r in lsh_topk(emb, queries).collect()}
-    finally:
-        DD.CARRY_MASKS = saved
-    assert masked_pairs == base_pairs and base_pairs
-    assert masked_knn == base_knn and base_knn
-    assert masked_topk == base_topk and base_topk
-    # and the per-call parameter overrides the module default
-    param_pairs = {(r.doc_a, r.doc_b, r.jaccard)
-                   for r in minhash_lsh_pairs(docs,
-                                              carry_masks=True).collect()}
-    assert param_pairs == base_pairs
-
-
 def test_embedding_stats_zero_norm_vector(spark):
     """A zero-norm vector's cosines are NULL (x/0) on both engines;
     its stats row — when LSH makes it anyone's candidate — must report
@@ -1860,79 +1824,6 @@ def test_embedding_stats_zero_norm_vector(spark):
         assert out[0]["near_dup_count"] == 0
         assert out[0]["max_cosine"] is None
     assert all(r["near_dup_count"] is not None for r in out.values())
-
-
-def test_lsh_topk_carry_masks_recovers_capped_corpus_row(spark,
-                                                         monkeypatch):
-    """ADVICE r08: lsh_topk's first-matching-band emission loses a
-    (query, corpus) pair entirely when the corpus row was capped out
-    of the FIRST signature-agreeing band, even though both sides
-    survive a later band. With carry_masks the capped band no longer
-    suppresses the later emission — same contract the minhash/simhash/
-    knn_graph siblings already pin.
-
-    Geometry (dim=2, planes=1, bands=2 → band b's bucket is the sign
-    of dot(v, hyperplane_b)): the query and 6 targets sit in the
-    (+,+) region (agree with the query in BOTH bands); a 30-vector
-    flood sits in (+,-) (shares only the band-0 bucket). cap=8 on the
-    corpus side caps some targets out of band 0's 36-row bucket while
-    band 1's 6-row bucket keeps everyone."""
-    import numpy as np
-
-    import coinbase_data_pipeline_spark.operators.dedup as dd
-    from coinbase_data_pipeline_spark.operators.ann import (
-        hyperplane_values, lsh_topk)
-
-    h0 = np.array(hyperplane_values(2, 0))
-    h1 = np.array(hyperplane_values(2, 1))
-    rng = np.random.default_rng(7)
-    plus_plus, plus_minus = [], []
-    while len(plus_plus) < 7 or len(plus_minus) < 30:
-        v = rng.standard_normal(2)
-        s0, s1 = float(v @ h0) >= 0, float(v @ h1) >= 0
-        if s0 and s1 and len(plus_plus) < 7:
-            plus_plus.append(v)
-        elif s0 and not s1 and len(plus_minus) < 30:
-            plus_minus.append(v)
-    qvec = plus_plus[0]
-    targets = plus_plus[1:]            # ids 1000..1005
-    corpus_rows = ([(1000 + i, [float(x) for x in v])
-                    for i, v in enumerate(targets)]
-                   + [(i, [float(x) for x in v])
-                      for i, v in enumerate(plus_minus)])
-    corpus = spark.createDataFrame(
-        corpus_rows, "vec_id long, embedding array<double>")
-    queries = spark.createDataFrame(
-        [(9999, [float(x) for x in qvec])],
-        "vec_id long, embedding array<double>")
-
-    cap = 8
-    orig = dd.cap_hot_buckets
-
-    def small_cap(banded, id_col, keys=("band", "bsig"),
-                  cap_=None, **kw):
-        return orig(banded, id_col, keys=keys, cap=cap, **kw)
-
-    monkeypatch.setattr(dd, "cap_hot_buckets", small_cap)
-
-    kw = dict(dim=2, planes=1, bands=2, k=40)
-    maskless = {r["nn_id"] for r in
-                lsh_topk(corpus, queries, carry_masks=False,
-                         **kw).collect()}
-    masked_rows = lsh_topk(corpus, queries, carry_masks=True,
-                           **kw).collect()
-    masked = {r["nn_id"] for r in masked_rows}
-
-    target_ids = {1000 + i for i in range(len(targets))}
-    # precondition: the cap actually bit — maskless lost >=1 target
-    lost = target_ids - maskless
-    assert lost, "cap never bound: adjust ids/seed so a target is capped"
-    # the masked mode recovers every target via band 1 (6-row bucket,
-    # nobody capped there), each exactly once
-    assert target_ids <= masked
-    assert len(masked_rows) == len(masked)
-    # and masking only ADDS recall, never drops pairs
-    assert maskless <= masked
 
 
 def test_service_health_subminute_age_semantics(spark):
@@ -2764,12 +2655,9 @@ def test_hot_bucket_cap_recall_floor_hub_family(spark):
     so the family resolves to ONE component with one keeper (no
     member silently becomes its own keeper);
     (c) no false links — nothing crosses into the fuzz corpus;
-    (d) capped pairs are a SUBSET of the uncapped ground truth;
-    (e) CARRY_MASKS=True emits the identical relation here
-    (identical signatures share one survivor set across bands)."""
+    (d) capped pairs are a SUBSET of the uncapped ground truth."""
     import numpy as np
 
-    import coinbase_data_pipeline_spark.operators.dedup as DD
     from coinbase_data_pipeline_spark.operators.dedup import (
         connected_components, minhash_lsh_pairs)
     from tools.fuzz_parity import gen_documents
@@ -2820,17 +2708,6 @@ def test_hot_bucket_cap_recall_floor_hub_family(spark):
                     docs, bucket_cap=1 << 30).collect()}
     capped_plain = {(r.doc_a, r.doc_b) for r in pairs}
     assert capped_plain <= uncapped
-    # (e) strong-recall mask mode: identical relation in this regime
-    saved = DD.CARRY_MASKS
-    try:
-        DD.CARRY_MASKS = True
-        masked = {(r.doc_a, r.doc_b)
-                  for r in minhash_lsh_pairs(docs, bucket_cap=cap,
-                                             link_capped=True)
-                  .collect()}
-    finally:
-        DD.CARRY_MASKS = saved
-    assert masked == capped_plain
 
 
 def test_ngram_jaccard_prefix_filter_matches_bruteforce(spark):

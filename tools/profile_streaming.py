@@ -29,6 +29,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
 
 from pyspark.sql import functions as F
 
+from coinbase_data_pipeline_spark.sources.tables import (  # noqa: E402
+    DEFAULT_SF_DIR)
+
 REC: list[dict] = []
 _CUR: dict = {}
 
@@ -36,8 +39,7 @@ _CUR: dict = {}
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument("--sf-dir", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
     args = ap.parse_args()
 
     from coinbase_data_pipeline_spark.plans import catalog_stream as CS

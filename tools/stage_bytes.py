@@ -19,7 +19,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from coinbase_data_pipeline_spark.sources.tables import (  # noqa: E402
+    DEFAULT_SF_DIR as SF_DIR)
 
 
 def _items(jcoll):
