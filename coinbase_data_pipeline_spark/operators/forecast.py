@@ -111,47 +111,39 @@ def forecast_metrics(candles: DataFrame, *, key: str = "product_id",
     )
 
 
-def holt_grid_sweep(df: DataFrame, *, key: str = "product_id",
-                    ts: str = "bucket_start", price: str = "close",
-                    grid: list[tuple[float, float]] | None = None
-                    ) -> DataFrame:
-    """Distributed (α, β) hyperparameter sweep for Holt double
-    exponential smoothing, scored by one-step-ahead MAE per key — the
-    Spark-native analog of the reference's Optuna loop
-    (Crypto-TS-Model-master/src/optimize_model.py) re-expressed as a
-    deterministic grid so the result is oracle-checkable.
+def _holt_sweep(df: DataFrame, key: str, ts: str, price: str,
+                spans: list[tuple[float, float]]) -> DataFrame:
+    """Score every HOLT_SWEEP_GRID lane per key over `spans`, then flag
+    the argmin — the one scorer behind both sweeps.
 
-    One Arrow-batched applyInPandas pass per key evaluates EVERY grid
-    point: the level/trend recursion is vectorized ACROSS the grid
-    lanes (one NumPy vector op per time step updates all candidates at
-    once), so the sweep costs one shuffle total — not one pass per
-    grid point — and parallelizes over keys exactly like
-    holt_features. Per-lane float semantics are unchanged by the
-    vectorization (elementwise NumPy ops round each lane's scalar op
-    individually), so every lane is bit-identical to the scalar
-    recursive-CTE oracle.
+    One Arrow-batched applyInPandas pass per key runs the Holt
+    recursion (:func:`indicators._holt_lane`) once per lane over the
+    whole series. A span (lo, hi) scores the one-step-ahead errors of
+    rows max(⌊n·lo⌋, 1) .. min(⌊n·hi⌋, n) − 1 (0-based): the rows
+    before it only advance the recursion, and every span's recursion
+    is a prefix of the full-series one, so one pass serves all spans
+    through a prefix sum. Each per-step error
+    |y_t − (level_{t−1} + trend_{t−1})| enters as the fixed-point
+    BIGINT floor(|err|·1e6 + 0.5), so the summed score is order-free
+    and engine-independent. One shuffle total, whatever the grid or
+    span count.
 
-    The per-step error |y_t − (level_{t−1} + trend_{t−1})| enters the
-    score as a fixed-point BIGINT (floor(|err|·1e6 + 0.5)) and the MAE
-    is the exact-integer ratio sum/(n·1e6) — order-free and
-    engine-independent. Output: one row per (key, alpha, beta) with
-    n_eval, mae, and is_best (argmin by integer error sum, ties to the
-    smallest (alpha, beta)).
+    Output: one row per (key, alpha, beta) with n_eval (scored rows
+    over all spans), mae (the exact integer half-up ratio
+    sum/(n_eval·1e6)) and is_best (argmin by integer error sum, ties
+    to the smallest (alpha, beta)). A key no span scores keeps its
+    rows with n_eval 0 and a NULL mae.
     """
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql.types import (BooleanType, DoubleType, LongType,
-                                   StructField, StructType)
+    from pyspark.sql.types import (DoubleType, LongType, StructField,
+                                   StructType)
 
-    if grid is None:
-        grid = HOLT_SWEEP_GRID
-    alphas = np.array([a for a, _ in grid], dtype=np.float64)
-    betas = np.array([b for _, b in grid], dtype=np.float64)
+    from .indicators import _holt_lane
 
-    key_field = df.schema[key]
     schema = StructType([
-        StructField(key, key_field.dataType),
+        StructField(key, df.schema[key].dataType),
         StructField("alpha", DoubleType()),
         StructField("beta", DoubleType()),
         StructField("n_eval", LongType()),
@@ -162,23 +154,26 @@ def holt_grid_sweep(df: DataFrame, *, key: str = "product_id",
         pdf = pdf.sort_values(ts)
         y = pdf[price].to_numpy(dtype="float64")
         n = len(y)
-        g = len(alphas)
-        oma, omb = 1.0 - alphas, 1.0 - betas
-        lvl = np.full(g, float(y[0]))
-        tr = np.zeros(g)
-        sum_fp = np.zeros(g, dtype=np.int64)
-        for t in range(1, n):
-            pred = lvl + tr
-            sum_fp += np.floor(
-                np.abs(y[t] - pred) * 1e6 + 0.5).astype(np.int64)
-            prev = lvl
-            lvl = alphas * y[t] + oma * pred
-            tr = betas * (lvl - prev) + omb * tr
+        cuts = [(max(int(np.floor(n * lo)), 1),
+                 min(int(np.floor(n * hi)), n)) for lo, hi in spans]
+        cuts = [(a, b) for a, b in cuts if b > a]
+        sums = []
+        for alpha, beta in HOLT_SWEEP_GRID:
+            level, trend = _holt_lane(y, alpha, beta)
+            err = np.floor(np.abs(y[1:] - (level[:-1] + trend[:-1]))
+                           * 1e6 + 0.5).astype(np.int64)
+            # c[t] sums the errors of rows 1 .. t−1: span [a, b) is
+            # c[b] − c[a]
+            c = np.concatenate(([0, 0], np.cumsum(err)))
+            sums.append(sum(int(c[b] - c[a]) for a, b in cuts))
+        g = len(HOLT_SWEEP_GRID)
         return pd.DataFrame({
             key: [pdf[key].iloc[0]] * g,
-            "alpha": alphas, "beta": betas,
-            "n_eval": np.full(g, max(n - 1, 0), dtype=np.int64),
-            "sum_abs_err_fp": sum_fp,
+            "alpha": [a for a, _ in HOLT_SWEEP_GRID],
+            "beta": [b for _, b in HOLT_SWEEP_GRID],
+            "n_eval": np.full(g, sum(b - a for a, b in cuts),
+                              dtype=np.int64),
+            "sum_abs_err_fp": np.array(sums, dtype=np.int64),
         })
 
     scored = df.groupBy(key).applyInPandas(_per_key, schema=schema)
@@ -202,6 +197,23 @@ def holt_grid_sweep(df: DataFrame, *, key: str = "product_id",
                     .alias("is_best")))
 
 
+def holt_grid_sweep(df: DataFrame, *, key: str = "product_id",
+                    ts: str = "bucket_start",
+                    price: str = "close") -> DataFrame:
+    """Distributed (α, β) hyperparameter sweep for Holt double
+    exponential smoothing, scored by one-step-ahead MAE per key over
+    the whole series — the Spark-native analog of the reference's
+    Optuna loop (Crypto-TS-Model-master/src/optimize_model.py)
+    re-expressed as a deterministic grid (HOLT_SWEEP_GRID) so the
+    result is oracle-checkable.
+
+    The one-span case of :func:`_holt_sweep`: the span (0, 1) scores
+    rows 2..n (1-based), so n_eval = n − 1, and a one-row series keeps
+    its grid rows with n_eval 0 and a NULL mae.
+    """
+    return _holt_sweep(df, key, ts, price, [(0.0, 1.0)])
+
+
 # Default sweep grid: 3 smoothing × 3 trend rates around the engine's
 # Holt defaults (HW_ALPHA=0.2, HW_BETA=0.1) — inlined into the DuckDB
 # oracle via repr, so keep values exactly representable in repr form.
@@ -210,10 +222,8 @@ HOLT_SWEEP_GRID: list[tuple[float, float]] = [
 
 
 def holt_cv_sweep(df: DataFrame, *, key: str = "product_id",
-                  ts: str = "bucket_start", price: str = "close",
-                  grid: list[tuple[float, float]] | None = None,
-                  folds: list[tuple[int, float]] | None = None,
-                  test_frac: float = 0.1) -> DataFrame:
+                  ts: str = "bucket_start",
+                  price: str = "close") -> DataFrame:
     """Walk-forward VALIDATION-scored (α, β) sweep — the missing half
     of :func:`holt_grid_sweep` (VERDICT r07 #3): the reference's
     Optuna loop (Crypto-TS-Model-master/src/optimize_model.py) scores
@@ -221,97 +231,25 @@ def holt_cv_sweep(df: DataFrame, *, key: str = "product_id",
     whereas holt_grid_sweep's one-step MAE over the whole series is
     in-sample selection that overfits any regime change.
 
-    Composition of the walk_forward_splits fold manifest with the
-    grid sweep: for each expanding-window fold (train = first fₖ of
-    each key's series, test = the next `test_frac`), the level/trend
-    recursion folds through the TRAIN span unscored and accumulates
-    the one-step-ahead error ONLY over the TEST span; errors sum
-    across folds per (key, α, β) and argmin flags the winner.
-
-    Same execution shape as holt_grid_sweep — one Arrow applyInPandas
-    pass per key, grid lanes vectorized inside the recursion (folds
-    loop outside: spans differ per fold, so the pass costs
-    len(folds) × series length, still one shuffle total) — and the
-    same fixed-point contract: per-step |err| enters as
-    floor(|err|·1e6 + 0.5) BIGINT, the fold-summed MAE is the exact
-    integer half-up ratio, ties break to the smallest (α, β).
-    Pytest pins that the CV argmin diverges from the in-sample argmin
-    on a planted trend→oscillation regime change."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
-    if grid is None:
-        grid = HOLT_SWEEP_GRID
-    if folds is None:
-        folds = HOLT_CV_FOLDS
-    alphas = np.array([a for a, _ in grid], dtype=np.float64)
-    betas = np.array([b for _, b in grid], dtype=np.float64)
-    fracs = [f for _, f in folds]
-
-    key_field = df.schema[key]
-    schema = StructType([
-        StructField(key, key_field.dataType),
-        StructField("alpha", DoubleType()),
-        StructField("beta", DoubleType()),
-        StructField("n_eval", LongType()),
-        StructField("sum_abs_err_fp", LongType()),
-    ])
-
-    def _per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts)
-        y = pdf[price].to_numpy(dtype="float64")
-        n = len(y)
-        g = len(alphas)
-        oma, omb = 1.0 - alphas, 1.0 - betas
-        sum_fp = np.zeros(g, dtype=np.int64)
-        n_eval = 0
-        for frac in fracs:
-            n_train = int(np.floor(n * frac))
-            n_end = min(int(np.floor(n * (frac + test_frac))), n)
-            if n < 2 or n_end <= max(n_train, 1):
-                continue
-            lvl = np.full(g, float(y[0]))
-            tr = np.zeros(g)
-            # one-step-ahead over rows 2..n_end (1-based); rows in the
-            # test span (rank > n_train) score, the train span only
-            # advances the recursion state
-            for t in range(1, n_end):
-                pred = lvl + tr
-                if t >= n_train:
-                    sum_fp += np.floor(
-                        np.abs(y[t] - pred) * 1e6 + 0.5).astype(np.int64)
-                prev = lvl
-                lvl = alphas * y[t] + oma * pred
-                tr = betas * (lvl - prev) + omb * tr
-            n_eval += n_end - max(n_train, 1)
-        return pd.DataFrame({
-            key: [pdf[key].iloc[0]] * g,
-            "alpha": alphas, "beta": betas,
-            "n_eval": np.full(g, n_eval, dtype=np.int64),
-            "sum_abs_err_fp": sum_fp,
-        })
-
-    scored = df.groupBy(key).applyInPandas(_per_key, schema=schema)
-    m = F.min(F.struct("sum_abs_err_fp", "alpha", "beta")).over(
-        Window.partitionBy(key))
-    return (scored.withColumn("_m", m)
-            .filter(F.col("n_eval") > 0)
-            .select(key, "alpha", "beta", "n_eval",
-                    (F.expr("(2 * sum_abs_err_fp + n_eval) "
-                            "div (2 * n_eval)")
-                     / F.lit(1000000.0)).alias("mae"),
-                    ((F.col("sum_abs_err_fp") == F.col("_m.sum_abs_err_fp"))
-                     & (F.col("alpha") == F.col("_m.alpha"))
-                     & (F.col("beta") == F.col("_m.beta")))
-                    .alias("is_best")))
+    The walk_forward_splits fold manifest composed with the grid: for
+    each expanding-window fold (train = first fₖ of each key's series,
+    test = the next HOLT_CV_TEST_FRAC), the one-step-ahead error is
+    scored ONLY over the test span; errors sum across folds per
+    (key, α, β) and argmin flags the winner. These are the spans
+    (fₖ, fₖ + HOLT_CV_TEST_FRAC) of :func:`_holt_sweep`, which smooths
+    each series once for all folds (a fold's train span is a prefix of
+    the series). Keys no fold scores (n_eval 0) are dropped. Pytest
+    pins that the CV argmin diverges from the in-sample argmin on a
+    planted trend→oscillation regime change."""
+    return _holt_sweep(df, key, ts, price,
+                       [(f, f + HOLT_CV_TEST_FRAC)
+                        for _, f in HOLT_CV_FOLDS]
+                       ).filter(F.col("n_eval") > 0)
 
 
-# CV folds: the walk_forward_splits manifest fractions (fold i trains
-# on the first fₖ, tests on the next 10%) — kept in lockstep with
-# plans/catalog_pred.py's WF_FOLDS so the manifest query and the CV
-# sweep describe the same folds.
+# Walk-forward folds, shared by holt_cv_sweep and the walk_forward_splits
+# manifest query: fold k trains on the first fₖ of each series and
+# tests on the next HOLT_CV_TEST_FRAC.
 HOLT_CV_FOLDS: list[tuple[int, float]] = [
     (1, 0.5), (2, 0.6), (3, 0.7), (4, 0.8)]
+HOLT_CV_TEST_FRAC = 0.1

@@ -484,6 +484,34 @@ def ewm_features(df: DataFrame, *, key: str, ts: str, price: str = "close",
     return df.groupBy(key).applyInPandas(_per_key, schema=schema)
 
 
+def _holt_lane(y, alpha: float, beta: float):
+    """The non-seasonal Holt recursion over one series, as the
+    (level, trend) arrays:
+
+        level_t = α·y_t + (1−α)·(level_{t−1} + trend_{t−1})
+        trend_t = β·(level_t − level_{t−1}) + (1−β)·trend_{t−1}
+
+    seeded level_1 = y_1, trend_1 = 0. The one copy of the update:
+    :func:`holt_features` and both forecast sweeps call it. The float
+    op order is written to match the recursive-CTE oracles literally
+    (both engines run IEEE-754 doubles), so the comparison is
+    bit-identical, not merely close."""
+    import numpy as np
+
+    oma, omb = 1.0 - alpha, 1.0 - beta
+    n = len(y)
+    level = np.empty(n)
+    trend = np.empty(n)
+    lvl, tr = float(y[0]), 0.0
+    level[0], trend[0] = lvl, tr
+    for t in range(1, n):
+        prev = lvl
+        lvl = alpha * float(y[t]) + oma * (lvl + tr)
+        tr = beta * (lvl - prev) + omb * tr
+        level[t], trend[t] = lvl, tr
+    return level, trend
+
+
 def holt_features(df: DataFrame, *, key: str, ts: str,
                   price: str = "close", alpha: float = 0.2,
                   beta: float = 0.1) -> DataFrame:
@@ -491,24 +519,16 @@ def holt_features(df: DataFrame, *, key: str, ts: str,
     the one-step-ahead forecast `level + trend` is the classic
     local-trend baseline the reference's model variants are benchmarked
     against (Crypto-TS-Model train.py's naive/last-value baselines;
-    this is the next rung up).
+    this is the next rung up). The recursion is :func:`_holt_lane`.
 
-        level_t = α·y_t + (1−α)·(level_{t−1} + trend_{t−1})
-        trend_t = β·(level_t − level_{t−1}) + (1−β)·trend_{t−1}
-
-    seeded level_1 = y_1, trend_1 = 0. Same execution recipe as
-    :func:`ewm_features`: the recursion is sequential per series, so
-    one Arrow-batched applyInPandas group per key, embarrassingly
-    parallel across keys. The float op order is written to match the
-    recursive-CTE oracle literally (both engines run IEEE-754
-    doubles), so the comparison is bit-identical, not merely close.
+    Same execution recipe as :func:`ewm_features`: the recursion is
+    sequential per series, so one Arrow-batched applyInPandas group
+    per key, embarrassingly parallel across keys.
     """
-    import numpy as np
     import pandas as pd
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    oma, omb = 1.0 - alpha, 1.0 - beta
     schema = StructType(df.schema.fields + [
         StructField("hw_level", DoubleType()),
         StructField("hw_trend", DoubleType()),
@@ -517,17 +537,8 @@ def holt_features(df: DataFrame, *, key: str, ts: str,
 
     def _per_key(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(ts)
-        y = pdf[price].to_numpy(dtype="float64")
-        n = len(y)
-        level = np.empty(n)
-        trend = np.empty(n)
-        lvl, tr = float(y[0]), 0.0
-        level[0], trend[0] = lvl, tr
-        for t in range(1, n):
-            prev = lvl
-            lvl = alpha * float(y[t]) + oma * (lvl + tr)
-            tr = beta * (lvl - prev) + omb * tr
-            level[t], trend[t] = lvl, tr
+        level, trend = _holt_lane(pdf[price].to_numpy(dtype="float64"),
+                                  alpha, beta)
         return pdf.assign(hw_level=level, hw_trend=trend,
                           hw_forecast=level + trend)
 

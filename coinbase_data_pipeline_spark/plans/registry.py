@@ -60,13 +60,20 @@ for _part in _QUERY_PARTS:
 #
 # ROUND-14 WINDOW: (a) none — every oracle-paired query has a driver
 # row;
-# (b) two changes this round. First, the banded-LSH candidate stage
-# now has one implementation in operators/dedup.py (`_band`,
-# `_self_candidates`, the shared MinHash base/band/verify) and the
-# unused masked-recall mode is gone; every query that runs an LSH
-# operator is listed first. Their physical plans are identical to the
+# (b) three changes this round. Newest first: the non-seasonal Holt
+# recursion is written once (indicators._holt_lane), and both Holt
+# sweeps score through one per-key pass (forecast._holt_sweep) that
+# smooths each series once for all folds; the fold fractions are
+# defined once (forecast.HOLT_CV_FOLDS). holt_param_sweep,
+# holt_cv_sweep and holt_winters run that code, and
+# walk_forward_splits reads the moved fold constant, so these four
+# lead. Second, the banded-LSH candidate stage now has one
+# implementation in operators/dedup.py (`_band`, `_self_candidates`,
+# the shared MinHash base/band/verify) and the unused masked-recall
+# mode is gone; every query that runs an LSH operator comes next.
+# Their physical plans are identical to the
 # parent's with expression ids normalized, except that simhash's
-# bucket key is now named `bsig` (was `bval`). Second, the join-
+# bucket key is now named `bsig` (was `bval`). Third, the join-
 # strategy policy moved into the session config (static broadcast
 # threshold 10 MB, AQE's 64 MB), replacing q9's orders demotion and
 # the dedup operators' measured-text-bytes hint: q9_product_profit,
@@ -77,11 +84,15 @@ for _part in _QUERY_PARTS:
 # (c) the 13 r09 leftovers (age 5 this round, the bound's worst
 # case; service_health is already in (b)), then the r10 rows
 # alphabetically as far as the window reaches. The r10 rows pushed
-# past the first 50 by the LSH queries are pq_encode,
+# past the first 50 by the Holt and LSH queries are model_score,
+# perplexity_proxy, pivot_points, pmi_collocations, pq_encode,
 # price_anomalies, purchase_attribution, q19_discounted_revenue,
 # q7_volume_shipping, quality_classifier, quality_classifier_scores,
 # quantile_transform, return_moments and returns_correlation.
 _CHECK_FIRST = [
+    # (b) round-14-changed code paths: the one Holt recursion
+    "holt_param_sweep", "holt_cv_sweep", "holt_winters",
+    "walk_forward_splits",
     # (b) round-14-changed code paths: the LSH candidate stage
     "dedup_minhash_lsh", "dedup_simhash_pairs", "dedup_embedding",
     "dedup_components", "ann_lsh", "knn_graph", "dedup_keep",
@@ -94,14 +105,13 @@ _CHECK_FIRST = [
     "retention_cohorts", "rolling_correlation", "sessionize",
     "stochastic", "stratified_sample", "tfidf_top_terms",
     "validate_input", "value_histogram", "volume_rollup",
-    # r10 rows (first 23 alphabetically)
+    # r10 rows (first 19 alphabetically)
     "ann_ivf", "ann_ivfpq", "ann_pq", "approx_quantiles_hist",
     "bloom_semi_join", "boilerplate_ngrams", "cluster_quality_profile",
     "cross_sectional_rank", "curriculum_augment", "dedup_spans",
     "dedup_tfidf_cosine", "gopher_quality", "grouped_scale_full",
     "heavy_hitters_cms", "hopping_volume", "keltner_channel",
-    "kmv_distinct_users", "kmv_weekly_merge", "mfi", "model_score",
-    "perplexity_proxy", "pivot_points", "pmi_collocations",
+    "kmv_distinct_users", "kmv_weekly_merge", "mfi",
 ]
 
 ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}

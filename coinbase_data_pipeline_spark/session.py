@@ -21,6 +21,29 @@ from pyspark.sql import SparkSession
 STATIC_BROADCAST_BYTES = 10 * 1024 * 1024
 ADAPTIVE_BROADCAST_BYTES = 64 * 1024 * 1024
 
+# The runtime confs the engine's query semantics depend on. Applied
+# when the session is built, re-applied to a live session, and
+# re-applied by sources.tables.ensure_runtime_conf on every table load,
+# because a caller may pass its own default-config session.
+SEMANTIC_CONFS = {
+    # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
+    # nanos type, so read as long and convert in the table registry
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # x/0 → NULL (classic Spark / DuckDB semantics), not an error
+    "spark.sql.ansi.enabled": "false",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
+def apply_confs(spark: SparkSession, confs: dict[str, str]) -> None:
+    """Set each runtime conf on a live session, skipping any that is
+    static or locked (the values set at build time then apply)."""
+    for k, v in confs.items():
+        try:
+            spark.conf.set(k, v)
+        except Exception:
+            pass
+
 # the package root: a tool's sys.path insert reaches only the driver,
 # while the Python workers (pandas UDFs) inherit the JVM's environment
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -49,14 +72,9 @@ def get_spark(app_name: str = "coinbase-data-pipeline-spark",
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
                 str(ADAPTIVE_BROADCAST_BYTES))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
-        # nanos type, so read as long and convert in the table registry
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # x/0 → NULL (classic Spark / DuckDB semantics), not an error
-        .config("spark.sql.ansi.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config(map=SEMANTIC_CONFS)
     )
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -64,22 +82,16 @@ def get_spark(app_name: str = "coinbase-data-pipeline-spark",
         # the engine's semantics depend on must still apply — silently
         # returning a default-config session would flip ANSI/timezone
         # behavior and the caller's shuffle sizing
-        for k, v in (
-            ("spark.sql.shuffle.partitions", str(shuffle_partitions)),
-            ("spark.sql.adaptive.enabled", "true"),
-            ("spark.sql.session.timeZone", "UTC"),
-            ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-            ("spark.sql.ansi.enabled", "false"),
-            ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-            ("spark.sql.autoBroadcastJoinThreshold",
-             str(STATIC_BROADCAST_BYTES)),
-            ("spark.sql.adaptive.autoBroadcastJoinThreshold",
-             str(ADAPTIVE_BROADCAST_BYTES)),
-        ):
-            try:
-                active.conf.set(k, v)
-            except Exception:
-                pass  # static or locked conf — builder defaults apply
+        apply_confs(active, {
+            "spark.sql.shuffle.partitions": str(shuffle_partitions),
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.execution.arrow.pyspark.enabled": "true",
+            "spark.sql.autoBroadcastJoinThreshold":
+                str(STATIC_BROADCAST_BYTES),
+            "spark.sql.adaptive.autoBroadcastJoinThreshold":
+                str(ADAPTIVE_BROADCAST_BYTES),
+            **SEMANTIC_CONFS,
+        })
         return active
     paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
              if p]

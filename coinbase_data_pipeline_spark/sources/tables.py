@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType
 
 from .. import memo
+from ..session import SEMANTIC_CONFS, apply_confs
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -24,20 +25,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def ensure_runtime_conf(spark: SparkSession) -> None:
-    """Runtime confs this engine's semantics depend on, set defensively
-    because callers (e.g. the verify driver) may pass their own session:
-
-    - nanosAsLong: testdata events.parquet stores TIMESTAMP(NANOS),
-      which Spark 4 otherwise refuses to read;
-    - ansi off: x/0 → NULL (DuckDB/classic-Spark semantics) instead of
-      an error — the engine's documented division semantics.
-    """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass  # conf locked down → session.py defaults already apply
+    """Apply session.SEMANTIC_CONFS (nanosAsLong, ANSI off, UTC), set
+    defensively because callers may pass their own default-config
+    session: testdata events.parquet stores TIMESTAMP(NANOS), which
+    Spark 4 otherwise refuses to read, and the engine's documented
+    division semantics are x/0 → NULL (DuckDB/classic Spark), not an
+    error."""
+    apply_confs(spark, SEMANTIC_CONFS)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

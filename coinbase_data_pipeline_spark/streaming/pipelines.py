@@ -26,6 +26,7 @@ at-most-once candle semantics of the reference's Cassandra upsert.
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -242,46 +243,27 @@ def streaming_sessionize(events: DataFrame, *, user: str = "user_id",
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
-class _stream_conf:
-    """Temporarily pin shuffle partitions for a streaming run; the
-    previous value is restored for the batch planner afterward."""
-
-    KEY = "spark.sql.shuffle.partitions"
-
-    def __init__(self, spark: SparkSession, n: int | None = None):
-        self.spark = spark
-        self.n = STREAM_SHUFFLE_PARTITIONS if n is None else n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(self.KEY)
-        self.spark.conf.set(self.KEY, str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set(self.KEY, self.prev)
+# Trailing no-data micro-batches: a no-data trigger is a full engine
+# cycle (~0.6-0.8 s of pure fixed cost per replay at bench scale). A
+# replay may turn them off ONLY when its OUTPUT provably doesn't depend
+# on them — i.e. no event-time timeout / state-eviction flush feeds the
+# sink (complete-mode aggregates, stateless appends, NoTimeout
+# applyInPandasWithState, unwatermarked joins); the watermark-timeout
+# queries — where that cycle IS the flush — keep the default.
+NO_DATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
+SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
 
-class _no_data_conf:
-    """Temporarily disable trailing no-data micro-batches for a replay
-    run whose OUTPUT provably doesn't depend on them — i.e. no
-    event-time timeout / state-eviction flush feeds the sink (complete-
-    mode aggregates, stateless appends, NoTimeout applyInPandasWithState,
-    unwatermarked joins). A no-data trigger is a full engine cycle
-    (~0.6-0.8 s of pure fixed cost per replay at bench scale); the
-    watermark-timeout queries — where that cycle IS the flush — keep
-    the default. Restored afterward either way."""
-
-    KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-
-    def __init__(self, spark: SparkSession, enabled: bool):
-        self.spark = spark
-        self.enabled = enabled
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(self.KEY)
-        self.spark.conf.set(self.KEY, str(self.enabled).lower())
-
-    def __exit__(self, *exc):
-        self.spark.conf.set(self.KEY, self.prev)
+@contextmanager
+def _conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for a streaming run; the previous value is
+    restored afterward (for the batch planner), error or not."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def run_to_memory(df: DataFrame, *, output_mode: str = "complete",
@@ -297,7 +279,7 @@ def run_to_memory(df: DataFrame, *, output_mode: str = "complete",
     added/removed/total — the bounded-state evidence) are appended to
     it. ``no_data_batches=False`` opts out of the trailing no-data
     trigger — callers may pass it ONLY when the sink output is
-    independent of timeout/eviction flushes (see _no_data_conf).
+    independent of timeout/eviction flushes (see NO_DATA_KEY).
     ``shuffle_partitions`` overrides STREAM_SHUFFLE_PARTITIONS for
     this run — the applyInPandasWithState replays pass a HIGHER count
     because their per-trigger cost is dominated by parallelizable
@@ -305,8 +287,11 @@ def run_to_memory(df: DataFrame, *, output_mode: str = "complete",
     per-partition state-store commits and want FEWER (measured sweep
     in SCALING.md's replay-profile section)."""
     name = f"stream_{uuid.uuid4().hex[:12]}"
-    with _stream_conf(df.sparkSession, shuffle_partitions), \
-            _no_data_conf(df.sparkSession, no_data_batches):
+    if shuffle_partitions is None:
+        shuffle_partitions = STREAM_SHUFFLE_PARTITIONS
+    with _conf(df.sparkSession, SHUFFLE_KEY, str(shuffle_partitions)), \
+            _conf(df.sparkSession, NO_DATA_KEY,
+                  str(no_data_batches).lower()):
         q = (df.writeStream.format("memory").queryName(name)
              .outputMode(output_mode)
              .trigger(availableNow=True)
@@ -646,7 +631,8 @@ def run_file_upsert_pipeline(spark: SparkSession, json_dir: str,
         F.col("volume").cast("double").alias("volume"))
     writer = candle_upsert_batch_writer(store_root, freq=freq,
                                         volume="volume")
-    with _stream_conf(spark), _no_data_conf(spark, False):
+    with _conf(spark, SHUFFLE_KEY, str(STREAM_SHUFFLE_PARTITIONS)), \
+            _conf(spark, NO_DATA_KEY, "false"):
         # no timeout semantics here, and an empty trailing delta would
         # still pay a full store read+rewrite cycle in the writer
         q = (parsed.writeStream.foreachBatch(writer)

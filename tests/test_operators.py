@@ -1745,6 +1745,38 @@ def test_holt_cv_argmin_diverges_from_insample(spark):
     assert cv[0]["n_eval"] == 80
 
 
+def test_holt_sweeps_differ_only_on_unscored_keys(spark):
+    """The two sweeps share one scorer and differ in one behaviour: a
+    key that no span scores. holt_grid_sweep keeps a one-row series'
+    grid rows (n_eval 0, NULL mae, the first lane flagged best on the
+    all-zero sums); holt_cv_sweep drops that key. A normal series is
+    scored by both."""
+    from coinbase_data_pipeline_spark.operators import forecast as FC
+
+    rows = [("ONE", 0.0, 50.0)] + [
+        ("N", float(t), 100.0 + 2.0 * (t % 7)) for t in range(40)]
+    df = spark.createDataFrame(
+        rows, "product_id string, bucket_start double, close double")
+    g = len(FC.HOLT_SWEEP_GRID)
+    grid = FC.holt_grid_sweep(df).collect()
+    cv = FC.holt_cv_sweep(df).collect()
+
+    one = [r for r in grid if r["product_id"] == "ONE"]
+    assert len(one) == g
+    assert all(r["n_eval"] == 0 and r["mae"] is None for r in one)
+    assert [(r["alpha"], r["beta"]) for r in one if r["is_best"]] == [
+        min(FC.HOLT_SWEEP_GRID)]
+    insample = [r for r in grid if r["product_id"] == "N"]
+    assert len(insample) == g
+    assert all(r["n_eval"] == 39 and r["mae"] > 0 for r in insample)
+
+    assert len(cv) == g and {r["product_id"] for r in cv} == {"N"}
+    # 4 + 4 + 3 + 4 scored rows: 0.7 + 0.1 is 0.7999999999999999, so
+    # the third fold's test span ends at floor(31.99...) = 31
+    assert all(r["n_eval"] == 15 and r["mae"] > 0 for r in cv)
+    assert sum(r["is_best"] for r in cv) == 1
+
+
 def test_service_health_flags_stale_product(spark):
     """Planted staleness: product A fresh on both stores → healthy;
     product B's last candle is 100 min behind the global now →

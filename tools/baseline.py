@@ -37,6 +37,45 @@ print(json.dumps({"sec": round(time.perf_counter() - t0, 3), "rows": n}))
 """
 
 
+def parse_worker_out(stdout: str) -> dict | None:
+    """The worker's reading from its stdout: the last line that parses
+    as a dict with the worker's keys, or None. Stray output (DuckDB's
+    progress bar, a parseable bare number) and empty output yield no
+    reading rather than an exception."""
+    for line in reversed(stdout.strip().splitlines()):
+        try:
+            cand = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        if isinstance(cand, dict) and "sec" in cand and "rows" in cand:
+            return cand
+    return None
+
+
+def run_worker(sql: str, sf_dir: str, threads: int, cap: float) -> dict:
+    """Run one oracle query in a fresh DuckDB process under a hard cap.
+    Returns {"sec", "rows", "capped", "note"}: a capped query is floored
+    at `cap`; a failed or unparseable run has sec None and an
+    "error: ..." note."""
+    try:
+        proc = subprocess.run(
+            [sys.executable, "-c", WORKER, sf_dir, str(threads)],
+            input=sql, capture_output=True, text=True, timeout=cap + 5)
+    except subprocess.TimeoutExpired:
+        return {"sec": cap, "rows": None, "capped": True, "note": ""}
+    if proc.returncode != 0:
+        err = " ".join(proc.stderr.strip()[-200:].split())
+        return {"sec": None, "rows": None, "capped": False,
+                "note": "error: " + err}
+    r = parse_worker_out(proc.stdout)
+    if r is None:
+        return {"sec": None, "rows": None, "capped": False,
+                "note": "error: unparseable worker out"}
+    if r["sec"] > cap:
+        return {"sec": cap, "rows": r["rows"], "capped": True, "note": ""}
+    return {**r, "capped": False, "note": ""}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
@@ -56,47 +95,15 @@ def main() -> None:
                              "note": "rows-only (no oracle)"}
             print(f"# {name}: no oracle", file=sys.stderr)
             continue
-        try:
-            proc = subprocess.run(
-                [sys.executable, "-c", WORKER, args.sf_dir,
-                 str(args.threads)],
-                input=ALL_ORACLES[name], capture_output=True, text=True,
-                timeout=args.cap + 5)
-            if proc.returncode != 0:
-                err = " ".join(proc.stderr.strip()[-200:].split())
-                results[name] = {"sec": None, "rows": None, "capped": False,
-                                 "note": "error: " + err}
-                print(f"# {name}: ERROR", file=sys.stderr)
-                continue
-            r = None
-            for line in reversed(proc.stdout.strip().splitlines()):
-                try:
-                    cand = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                # stray worker output can be a parseable bare number;
-                # only a dict with the worker's keys is a result
-                if isinstance(cand, dict) and "sec" in cand \
-                        and "rows" in cand:
-                    r = cand
-                    break
-            if r is None:
-                results[name] = {"sec": None, "rows": None,
-                                 "capped": False,
-                                 "note": "error: unparseable worker out"}
-                print(f"# {name}: ERROR (no JSON)", file=sys.stderr)
-                continue
-            if r["sec"] > args.cap:
-                results[name] = {"sec": args.cap, "rows": r["rows"],
-                                 "capped": True, "note": ""}
-            else:
-                results[name] = {**r, "capped": False, "note": ""}
+        r = results[name] = run_worker(ALL_ORACLES[name], args.sf_dir,
+                                       args.threads, args.cap)
+        if r["note"]:
+            print(f"# {name}: ERROR ({r['note']})", file=sys.stderr)
+        elif r["capped"]:
+            print(f"# {name}: CAPPED at {args.cap}s", file=sys.stderr)
+        else:
             print(f"# {name}: {r['sec']}s ({r['rows']} rows)",
                   file=sys.stderr)
-        except subprocess.TimeoutExpired:
-            results[name] = {"sec": args.cap, "rows": None, "capped": True,
-                             "note": ""}
-            print(f"# {name}: CAPPED at {args.cap}s", file=sys.stderr)
 
     timed = {k: v["sec"] for k, v in results.items() if v["sec"] is not None}
     out = {"metric": "duckdb_oracle_baseline_total",

@@ -15,7 +15,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -32,7 +31,7 @@ def main() -> None:
 
     sys.path.insert(0, REPO)
     from coinbase_data_pipeline_spark.plans.registry import ALL_ORACLES
-    from tools.baseline import WORKER
+    from tools.baseline import run_worker
 
     with open(os.path.join(REPO, "BASELINE.json")) as f:
         base = json.load(f)
@@ -42,27 +41,28 @@ def main() -> None:
     rows: list[tuple[str, str]] = []
     for name in capped:
         t0 = time.time()
-        try:
-            proc = subprocess.run(
-                [sys.executable, "-c", WORKER, sf_dir,
-                 str(args.threads)],
-                input=ALL_ORACLES[name], capture_output=True,
-                text=True, timeout=args.cap + 5)
-            r = json.loads(proc.stdout.strip().splitlines()[-1]) \
-                if proc.returncode == 0 else None
-        except subprocess.TimeoutExpired:
-            r = None
-        if r is None or r["sec"] > args.cap:
+        r = run_worker(ALL_ORACLES[name], sf_dir, args.threads, args.cap)
+        if r["note"]:
+            cell = "error (see the run's stderr)"
+            print(f"# {name}: {r['note']}", file=sys.stderr)
+        elif r["capped"]:
             cell = f"≥{args.cap:.0f} (still capped)"
         else:
             cell = f"{r['sec']:.1f}"
         rows.append((name, cell))
         print(f"# {name}: {cell} ({time.time() - t0:.0f}s wall)",
               file=sys.stderr, flush=True)
+        # splice after every reading: a later failure keeps these
+        write_block(rows, args.cap)
+    print(write_block(rows, args.cap))
 
+
+def write_block(rows: list[tuple[str, str]], cap: float) -> str:
+    """Splice the readings so far into BASELINE.md between the marker
+    lines; returns the block."""
     lines = [
         MARK_START,
-        f"## Higher-cap readings for the capped oracles (cap {args.cap:.0f}s)",
+        f"## Higher-cap readings for the capped oracles (cap {cap:.0f}s)",
         "",
         "The 60s-capped rows above floor the total, making the",
         "bench-vs-baseline aggregate a LOWER bound on the Spark win",
@@ -74,7 +74,7 @@ def main() -> None:
         "Regenerate: `PYTHONPATH=. python tools/baseline_recap.py`.",
         "",
         "| query | duckdb sec (cap "
-        f"{args.cap:.0f}) | spark (BENCH_DETAIL min) |",
+        f"{cap:.0f}) | spark (BENCH_DETAIL min) |",
         "|---|---|---|",
     ]
     # pair each reading with the engine's committed bench min
@@ -103,7 +103,7 @@ def main() -> None:
         text = text.rstrip("\n") + "\n\n" + block + "\n"
     with open(path, "w") as f:
         f.write(text)
-    print(block)
+    return block
 
 
 if __name__ == "__main__":

@@ -70,8 +70,12 @@ def main() -> None:
                             progress_out=None, no_data_batches=True,
                             shuffle_partitions=None):
         name = f"stream_{uuid.uuid4().hex[:12]}"
-        with P._stream_conf(df.sparkSession, shuffle_partitions), \
-                P._no_data_conf(df.sparkSession, no_data_batches):
+        if shuffle_partitions is None:
+            shuffle_partitions = P.STREAM_SHUFFLE_PARTITIONS
+        with P._conf(df.sparkSession, P.SHUFFLE_KEY,
+                     str(shuffle_partitions)), \
+                P._conf(df.sparkSession, P.NO_DATA_KEY,
+                        str(no_data_batches).lower()):
             t0 = time.perf_counter()
             sq = (df.writeStream.format("memory").queryName(name)
                   .outputMode(output_mode)
