@@ -7,4 +7,15 @@ sequential per-key operators (EWM family) via Arrow-batched
 applyInPandas.
 """
 
+
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# Pandas-UDF closures call package functions (the Holt recursion, the
+# media header parser, the session fold). Registering the package
+# pickles every submodule's functions by value, so the Python workers
+# run them without the package being importable there.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

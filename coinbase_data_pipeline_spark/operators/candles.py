@@ -17,6 +17,9 @@ key skew (AQE skew-join/partition split handles hot keys).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -163,16 +166,18 @@ def time_range_fetch(df: DataFrame, *, key: str = "product_id",
     """Key + time-range scan (data_fetcher.get_candles_stmt).
 
     Pure filters → Catalyst pushes them into the parquet scan
-    (PushedFilters), so only matching row groups are read.
+    (PushedFilters), so only matching row groups are read. The bounds
+    go in as one conjunctive filter, which pushes the same filters as
+    chained ones.
     """
-    out = df
+    conds = []
     if key_value is not None:
-        out = out.filter(F.col(key) == key_value)
+        conds.append(F.col(key) == key_value)
     if start is not None:
-        out = out.filter(F.col(ts) >= start)
+        conds.append(F.col(ts) >= start)
     if end is not None:
-        out = out.filter(F.col(ts) <= end)
-    return out
+        conds.append(F.col(ts) <= end)
+    return df.filter(reduce(operator.and_, conds)) if conds else df
 
 
 def available_products(df: DataFrame, *, key: str = "product_id") -> DataFrame:

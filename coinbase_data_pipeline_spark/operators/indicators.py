@@ -11,12 +11,25 @@ evaluates all features in a single Window operator chain. That is the
 plan you want at 100 TB: shuffle each series to its executor once,
 then stream it.
 
+Every rolling, lag and time feature is written once as SQL text and
+applied with ``selectExpr``: :func:`enhance_features` is
+``spread_by_key`` plus two projections (log returns and the lag
+helpers, then every rolling and time feature), and each ``with_*``
+builder is one projection (two where it needs a lag helper). SQL text
+and Column calls go through the same Catalyst analysis, so this changes
+how fast the plan is built, not what it computes: one whole windowed
+expression as text is one py4j call, where the Column API makes one
+per ``F.col``, window spec and operator (measurements in ROADMAP
+item 2). Literals are written as doubles (``100.0D``): a bare
+``100.0`` is a DECIMAL in Spark SQL, where the Column API's Python
+floats are doubles.
+
 EWM-family smoothing (Wilder RSI, MACD's EMA) is inherently
 sequential per key; those live in :func:`ewm_features` as an
 Arrow-batched applyInPandas where one group = one key's series —
 parallel across keys, exactly the reference's per-product Cassandra
-partitioning. Everything else is pure pyspark.sql.functions (JVM
-codegen, no Python in the hot path).
+partitioning. Everything else is Spark SQL expressions (JVM codegen,
+no Python in the hot path).
 
 Semantics notes (documented deltas from the `ta` library, chosen for
 distributed-friendliness; each is a recognized standard variant):
@@ -42,6 +55,140 @@ def _rows(key: str, ts: str, n: int) -> Window:
     return _w(key, ts).rowsBetween(-(n - 1), 0)
 
 
+# ------------------------------------------------------- SQL-text features
+#
+# Each feature below is written once, as the SQL text of one column:
+# a list of (name, expression) pairs. The with_* builders and
+# enhance_features apply them with selectExpr.
+
+def _q(name: str) -> str:
+    """Backtick-quote a caller-supplied column name for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _over(key: str, ts: str, frame: str = "") -> str:
+    """OVER clause of the shared key-ordered window family."""
+    return f"OVER (PARTITION BY {_q(key)} ORDER BY {_q(ts)}{frame})"
+
+
+def _trailing(key: str, ts: str, n: int) -> str:
+    """Trailing n-row window (current row inclusive)."""
+    return _over(key, ts, f" ROWS BETWEEN {n - 1} PRECEDING AND CURRENT ROW")
+
+
+def _project(df: DataFrame, cols: list[str],
+             feats: list[tuple[str, str]]) -> DataFrame:
+    """SELECT `cols`, then `feats`, in ONE projection. A feature named
+    like one of `cols` replaces that column in place (withColumn
+    semantics); a column of `df` not in `cols` (a lag helper) drops
+    out."""
+    sql = dict(feats)
+    keep = [f"{sql.pop(c)} AS {_q(c)}" if c in sql else _q(c) for c in cols]
+    return df.selectExpr(*keep, *(f"{e} AS {_q(n)}" for n, e in sql.items()))
+
+
+def _full(fn: str, col: str, key: str, ts: str, n: int) -> str:
+    """fn(col) over the trailing n rows, NULL until the frame holds n
+    non-NULL values (pandas' default min_periods); `col` is SQL text."""
+    w = _trailing(key, ts, n)
+    return f"CASE WHEN count({col}) {w} >= {n} THEN {fn}({col}) {w} END"
+
+
+def _lag(key: str, ts: str, col: str) -> str:
+    """The previous row's `col` within the key's series."""
+    return f"lag({_q(col)}) {_over(key, ts)}"
+
+
+def _delta(key: str, ts: str, price: str) -> str:
+    """price − previous price, the lag term of RSI's and OBV's helpers."""
+    return f"({_q(price)} - {_lag(key, ts, price)})"
+
+
+def _log_returns(key, ts, price, out):
+    p, prev = _q(price), _lag(key, ts, price)
+    return [(out, f"CASE WHEN {p} > 0 AND {prev} > 0 "
+                  f"THEN ln({p} / {prev}) END")]
+
+
+def _price(key, ts, price, high, low, ma_window):
+    p = _q(price)
+    return [("price_ma_ratio",
+             f"{p} / avg({p}) {_trailing(key, ts, ma_window)}"),
+            ("price_spread", f"({_q(high)} - {_q(low)}) / {p}")]
+
+
+def _volume(key, ts, price, volume, window):
+    v = _q(volume)
+    return [("volume_zscore",
+             f"({v} - {_full('avg', v, key, ts, window)})"
+             f" / {_full('stddev_samp', v, key, ts, window)}"),
+            ("volume_ma_ratio",
+             f"{v} / avg({v}) {_trailing(key, ts, window)}"),
+            ("liquidity", f"log1p({v} * {_q(price)})")]
+
+
+def _rsi_lags(key, ts, price):
+    d = _delta(key, ts, price)
+    return [("_gain", f"CASE WHEN {d} > 0 THEN {d} "
+                      f"WHEN {d} IS NOT NULL THEN 0.0D END"),
+            ("_loss", f"CASE WHEN {d} < 0 THEN -{d} "
+                      f"WHEN {d} IS NOT NULL THEN 0.0D END")]
+
+
+def _rsi(key, ts, window, out):
+    w = _trailing(key, ts, window)
+    gain, loss = f"avg(_gain) {w}", f"avg(_loss) {w}"
+    return [(out, f"CASE WHEN count(_gain) {w} >= {window} THEN "
+                  f"CASE WHEN {loss} = 0 THEN 100.0D "
+                  f"ELSE 100.0D - 100.0D / (1.0D + {gain} / {loss}) END END")]
+
+
+def _atr_lags(key, ts, high, low, close):
+    h, lo, prev = _q(high), _q(low), _lag(key, ts, close)
+    return [("_tr", f"greatest({h} - {lo}, abs({h} - {prev}), "
+                    f"abs({lo} - {prev}))")]
+
+
+def _atr(key, ts, window, out):
+    return [(out, _full("avg", "_tr", key, ts, window))]
+
+
+def _obv_lags(key, ts, price, volume):
+    d, v = _delta(key, ts, price), _q(volume)
+    return [("_sv", f"CASE WHEN {d} > 0 THEN {v} WHEN {d} < 0 THEN -{v} "
+                    f"ELSE 0.0D END")]
+
+
+def _obv(key, ts, out):
+    running = " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    return [(out, f"sum(_sv) {_over(key, ts, running)}")]
+
+
+def _volatility(key, ts, returns, windows):
+    return [(f"volatility_{n}", _full("stddev_samp", _q(returns), key, ts, n))
+            for n in windows]
+
+
+def _momentum(key, ts, price):
+    def ma(n: int) -> str:
+        return _full("avg", _q(price), key, ts, n)
+    return [("momentum_3_6", f"{ma(3)} - {ma(6)}"),
+            ("momentum_6_12", f"{ma(6)} - {ma(12)}")]
+
+
+def _time(ts):
+    hour, dow = f"hour({_q(ts)})", f"weekday({_q(ts)})"
+    two_pi = repr(2.0 * 3.141592653589793) + "D"
+    return [("hour", hour),
+            ("dayofweek", dow),
+            ("is_weekend", f"CAST({dow} IN (5, 6) AS INT)"),
+            ("is_market_open", f"CAST({hour} >= 8 AND {hour} < 20 AS INT)"),
+            ("hour_sin", f"sin({hour} * {two_pi} / 24.0D)"),
+            ("hour_cos", f"cos({hour} * {two_pi} / 24.0D)"),
+            ("dow_sin", f"sin({dow} * {two_pi} / 7.0D)"),
+            ("dow_cos", f"cos({dow} * {two_pi} / 7.0D)")]
+
+
 # ---------------------------------------------------------------- returns
 
 def with_log_returns(df: DataFrame, *, key: str, ts: str,
@@ -53,20 +200,15 @@ def with_log_returns(df: DataFrame, *, key: str, ts: str,
     zero `prev` gives IEEE +inf in Spark while DuckDB THROWS on
     ln(0) — a divergence that only appears once the data is big
     enough to contain a zero-priced candle (sf0.1 has 4)."""
-    prev = F.lag(price).over(_w(key, ts))
-    return df.withColumn(out, F.when((F.col(price) > 0) & (prev > 0),
-                                     F.log(F.col(price) / prev)))
+    return _project(df, df.columns, _log_returns(key, ts, price, out))
 
 
 def with_price_features(df: DataFrame, *, key: str, ts: str,
                         price: str = "close", high: str = "high",
                         low: str = "low", ma_window: int = 24) -> DataFrame:
     """price_ma_ratio (min_periods=1) and price_spread (data_loader.py:92-93)."""
-    ma = F.avg(price).over(_rows(key, ts, ma_window))
-    return (df
-            .withColumn("price_ma_ratio", F.col(price) / ma)
-            .withColumn("price_spread",
-                        (F.col(high) - F.col(low)) / F.col(price)))
+    return _project(df, df.columns,
+                    _price(key, ts, price, high, low, ma_window))
 
 
 def with_volume_features(df: DataFrame, *, key: str, ts: str,
@@ -77,17 +219,7 @@ def with_volume_features(df: DataFrame, *, key: str, ts: str,
     zscore uses full-window semantics (NULL until `window` rows exist,
     pandas default min_periods); ma_ratio uses min_periods=1.
     """
-    wn = _rows(key, ts, window)
-    cnt = F.count(volume).over(wn)
-    mean_full = F.when(cnt >= window, F.avg(volume).over(wn))
-    std_full = F.when(cnt >= window, F.stddev_samp(F.col(volume)).over(wn))
-    return (df
-            .withColumn("volume_zscore",
-                        (F.col(volume) - mean_full) / std_full)
-            .withColumn("volume_ma_ratio",
-                        F.col(volume) / F.avg(volume).over(wn))
-            .withColumn("liquidity",
-                        F.log1p(F.col(volume) * F.col(price))))
+    return _project(df, df.columns, _volume(key, ts, price, volume, window))
 
 
 # ------------------------------------------------------------- indicators
@@ -99,37 +231,18 @@ def with_rsi(df: DataFrame, *, key: str, ts: str, price: str = "close",
     (data_loader.py:101 uses Wilder's; see module docstring.)
     NULL until `window` deltas exist; all-gain windows → 100.
     """
-    w1 = _w(key, ts)
-    delta = F.col(price) - F.lag(price).over(w1)
-    tmp = df.withColumn("_gain", F.when(delta > 0, delta).otherwise(
-                            F.when(delta.isNotNull(), F.lit(0.0))))
-    tmp = tmp.withColumn("_loss", F.when(delta < 0, -delta).otherwise(
-                            F.when(delta.isNotNull(), F.lit(0.0))))
-    wn = _rows(key, ts, window)
-    cnt = F.count("_gain").over(wn)
-    avg_gain = F.avg("_gain").over(wn)
-    avg_loss = F.avg("_loss").over(wn)
-    rsi = F.when(cnt >= window,
-                 F.when(avg_loss == 0, F.lit(100.0))
-                  .otherwise(100.0 - 100.0 / (1.0 + avg_gain / avg_loss)))
-    return tmp.withColumn(out, rsi).drop("_gain", "_loss")
+    cols = df.columns
+    return _project(_project(df, cols, _rsi_lags(key, ts, price)), cols,
+                    _rsi(key, ts, window, out))
 
 
 def with_atr(df: DataFrame, *, key: str, ts: str, high: str = "high",
              low: str = "low", close: str = "close", window: int = 14,
              out: str = "atr") -> DataFrame:
     """SMA-of-true-range ATR (data_loader.py:103 uses Wilder's EWM)."""
-    w1 = _w(key, ts)
-    prev_close = F.lag(close).over(w1)
-    tr = F.greatest(
-        F.col(high) - F.col(low),
-        F.abs(F.col(high) - prev_close),
-        F.abs(F.col(low) - prev_close),
-    )
-    tmp = df.withColumn("_tr", tr)
-    wn = _rows(key, ts, window)
-    atr = F.when(F.count("_tr").over(wn) >= window, F.avg("_tr").over(wn))
-    return tmp.withColumn(out, atr).drop("_tr")
+    cols = df.columns
+    return _project(_project(df, cols, _atr_lags(key, ts, high, low, close)),
+                    cols, _atr(key, ts, window, out))
 
 
 def with_obv(df: DataFrame, *, key: str, ts: str, price: str = "close",
@@ -137,56 +250,28 @@ def with_obv(df: DataFrame, *, key: str, ts: str, price: str = "close",
     """On-balance volume: running sum of sign(Δprice)·volume
     (data_loader.py:104). Unbounded-preceding cumulative sum — one pass
     per series, no extra shuffle (same window family)."""
-    w1 = _w(key, ts)
-    delta = F.col(price) - F.lag(price).over(w1)
-    signed = (F.when(delta > 0, F.col(volume))
-               .when(delta < 0, -F.col(volume))
-               .otherwise(F.lit(0.0)))
-    tmp = df.withColumn("_sv", signed)
-    cum = F.sum("_sv").over(_w(key, ts).rowsBetween(Window.unboundedPreceding, 0))
-    return tmp.withColumn(out, cum).drop("_sv")
+    cols = df.columns
+    return _project(_project(df, cols, _obv_lags(key, ts, price, volume)),
+                    cols, _obv(key, ts, out))
 
 
 def with_volatility(df: DataFrame, *, key: str, ts: str,
                     returns: str = "log_returns",
                     windows: tuple[int, ...] = (6, 12, 24)) -> DataFrame:
     """Rolling std of log returns, full-window (data_loader.py:107-108)."""
-    out = df
-    for n in windows:
-        wn = _rows(key, ts, n)
-        col = F.when(F.count(returns).over(wn) >= n,
-                     F.stddev_samp(F.col(returns)).over(wn))
-        out = out.withColumn(f"volatility_{n}", col)
-    return out
+    return _project(df, df.columns, _volatility(key, ts, returns, windows))
 
 
 def with_momentum(df: DataFrame, *, key: str, ts: str,
                   price: str = "close") -> DataFrame:
     """MA(3)-MA(6) and MA(6)-MA(12), full-window (data_loader.py:111-112)."""
-    def ma(n: int):
-        wn = _rows(key, ts, n)
-        return F.when(F.count(price).over(wn) >= n, F.avg(price).over(wn))
-    return (df
-            .withColumn("momentum_3_6", ma(3) - ma(6))
-            .withColumn("momentum_6_12", ma(6) - ma(12)))
+    return _project(df, df.columns, _momentum(key, ts, price))
 
 
 def with_time_features(df: DataFrame, *, ts: str) -> DataFrame:
     """hour/dow/weekend/market-open + cyclical encodings
     (data_loader.py:115-124). dow is Monday=0 like pandas."""
-    hour = F.hour(ts)
-    dow = F.weekday(ts)
-    two_pi = 2.0 * 3.141592653589793
-    return (df
-            .withColumn("hour", hour)
-            .withColumn("dayofweek", dow)
-            .withColumn("is_weekend", dow.isin(5, 6).cast("int"))
-            .withColumn("is_market_open",
-                        ((hour >= 8) & (hour < 20)).cast("int"))
-            .withColumn("hour_sin", F.sin(two_pi * hour / F.lit(24.0)))
-            .withColumn("hour_cos", F.cos(two_pi * hour / F.lit(24.0)))
-            .withColumn("dow_sin", F.sin(two_pi * dow / F.lit(7.0)))
-            .withColumn("dow_cos", F.cos(two_pi * dow / F.lit(7.0))))
+    return _project(df, df.columns, _time(ts))
 
 
 # ---------------------------------------------------------------- cleaning
@@ -618,8 +703,10 @@ def holt_winters_seasonal(df: DataFrame, *, key: str, ts: str,
 def enhance_features(candles: DataFrame, *, key: str = "product_id",
                      ts: str = "bucket_start") -> DataFrame:
     """The reference's full `_enhance_crypto_features` (minus EWM
-    indicators — compose with :func:`ewm_features` when needed).
-    All window functions share one partitioning → one shuffle total.
+    indicators — compose with :func:`ewm_features` when needed), with
+    the with_* builders' default windows. All window functions share
+    one partitioning → one shuffle total; the two projections plan as
+    two Window operators over one sort.
     """
     from .spread import spread_by_key
 
@@ -627,16 +714,23 @@ def enhance_features(candles: DataFrame, *, key: str = "product_id",
     # byte-based coalescer sees a few MB and serializes this 25-column
     # window chain onto one core otherwise (see spread_by_key)
     df = spread_by_key(candles, key)
-    df = with_log_returns(df, key=key, ts=ts)
-    df = with_price_features(df, key=key, ts=ts)
-    df = with_volume_features(df, key=key, ts=ts)
-    df = with_rsi(df, key=key, ts=ts)
-    df = with_atr(df, key=key, ts=ts)
-    df = with_obv(df, key=key, ts=ts)
-    df = with_volatility(df, key=key, ts=ts)
-    df = with_momentum(df, key=key, ts=ts)
-    df = with_time_features(df, ts=ts)
-    return df
+    cols = df.columns
+    # pass 1: log returns and the lag helpers the rolling features read
+    df = _project(df, cols, [
+        *_log_returns(key, ts, "close", "log_returns"),
+        *_rsi_lags(key, ts, "close"),
+        *_atr_lags(key, ts, "high", "low", "close"),
+        *_obv_lags(key, ts, "close", "volume")])
+    # pass 2: every rolling and time feature; the helpers drop out
+    return _project(df, [*cols, "log_returns"], [
+        *_price(key, ts, "close", "high", "low", 24),
+        *_volume(key, ts, "close", "volume", 24),
+        *_rsi(key, ts, 14, "rsi"),
+        *_atr(key, ts, 14, "atr"),
+        *_obv(key, ts, "obv"),
+        *_volatility(key, ts, "log_returns", (6, 12, 24)),
+        *_momentum(key, ts, "close"),
+        *_time(ts)])
 
 
 def max_drawdown(df: DataFrame, *, key: str, ts: str,

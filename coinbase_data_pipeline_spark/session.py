@@ -44,10 +44,6 @@ def apply_confs(spark: SparkSession, confs: dict[str, str]) -> None:
         except Exception:
             pass
 
-# the package root: a tool's sys.path insert reaches only the driver,
-# while the Python workers (pandas UDFs) inherit the JVM's environment
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
 
 def get_spark(app_name: str = "coinbase-data-pipeline-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -93,8 +89,4 @@ def get_spark(app_name: str = "coinbase-data-pipeline-spark",
             **SEMANTIC_CONFS,
         })
         return active
-    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
-             if p]
-    if _ROOT not in paths:
-        os.environ["PYTHONPATH"] = os.pathsep.join([_ROOT, *paths])
     return builder.master(f"local[{cpus}]").getOrCreate()

@@ -317,6 +317,64 @@ def test_grouped_scale_full_matrix(spark):
                                want_rsi.to_numpy(), atol=1e-9)
 
 
+# enhance_features' output dtypes: a SQL literal written without its D
+# suffix is a DECIMAL and would turn a double feature into a decimal
+FEATURE_DTYPES = {
+    "log_returns": "double", "price_ma_ratio": "double",
+    "price_spread": "double", "volume_zscore": "double",
+    "volume_ma_ratio": "double", "liquidity": "double", "rsi": "double",
+    "atr": "double", "obv": "double", "volatility_6": "double",
+    "volatility_12": "double", "volatility_24": "double",
+    "momentum_3_6": "double", "momentum_6_12": "double", "hour": "int",
+    "dayofweek": "int", "is_weekend": "int", "is_market_open": "int",
+    "hour_sin": "double", "hour_cos": "double", "dow_sin": "double",
+    "dow_cos": "double",
+}
+
+
+def test_enhance_features_equals_the_builder_chain(spark):
+    """enhance_features (two projections) equals the with_* builders
+    applied one after another — same columns in the same order, same
+    dtypes, same count and the same xxhash64 of every column — and
+    every feature keeps its dtype."""
+    from coinbase_data_pipeline_spark.operators import indicators as I
+    from coinbase_data_pipeline_spark.plans.catalog import candles
+
+    c = candles(spark, SF)
+    k = {"key": "product_id", "ts": "bucket_start"}
+    chain = c
+    for build in (I.with_log_returns, I.with_price_features,
+                  I.with_volume_features, I.with_rsi, I.with_atr,
+                  I.with_obv, I.with_volatility, I.with_momentum):
+        chain = build(chain, **k)
+    chain = I.with_time_features(chain, ts="bucket_start")
+    feat = I.enhance_features(c)
+
+    assert feat.dtypes == chain.dtypes
+    assert dict(feat.dtypes[-len(FEATURE_DTYPES):]) == FEATURE_DTYPES
+    assert feat.columns == c.columns + list(FEATURE_DTYPES)
+
+    def digest(df):
+        return df.agg(F.count(F.lit(1)),
+                      *[F.bit_xor(F.xxhash64(x)) for x in df.columns]
+                      ).collect()[0]
+
+    got, want = digest(feat), digest(chain)
+    assert got[0] > 0
+    assert got == want
+
+    # the cyclical encodings against Column-API double literals: 2π
+    # written as a bare (DECIMAL) literal changes their last bits
+    two_pi = 2.0 * 3.141592653589793
+    hour, dow = F.hour("bucket_start"), F.weekday("bucket_start")
+    ref = {"hour_sin": F.sin(two_pi * hour / F.lit(24.0)),
+           "hour_cos": F.cos(two_pi * hour / F.lit(24.0)),
+           "dow_sin": F.sin(two_pi * dow / F.lit(7.0)),
+           "dow_cos": F.cos(two_pi * dow / F.lit(7.0))}
+    for name, expr in ref.items():
+        assert feat.filter(~F.col(name).eqNullSafe(expr)).count() == 0, name
+
+
 def test_doc_chunk_overlap_and_coverage(spark):
     """Chunks tile the token stream with the configured overlap: chunk
     i starts at token i*stride, all chunks but the last are full-size,

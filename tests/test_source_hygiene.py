@@ -100,3 +100,42 @@ def test_scaling_decade_appendices_intact():
         start = scaling.index(f"<!-- {name}:start -->")
         end = scaling.find(f"<!-- {name}:end -->")
         assert end > start, f"appendix {name} has no end marker"
+
+
+def test_udf_helpers_unpickle_without_the_package(tmp_path):
+    """Package functions that pandas-UDF closures call (the Holt
+    recursion, the media header parser, the session fold) travel by
+    value: an isolated interpreter (`python -I`, started from a temp
+    directory, so neither PYTHONPATH nor the repo is on its path)
+    loads and runs them without importing the package, as a Python
+    worker of a caller-built session must."""
+    import json
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from coinbase_data_pipeline_spark.operators import indicators, multimodal
+    from coinbase_data_pipeline_spark.streaming import pipelines
+
+    image = multimodal.encode_image(2, 3, bytes(6))
+    payload = tmp_path / "helpers.pkl"
+    payload.write_bytes(cloudpickle.dumps(
+        (indicators._holt_lane, multimodal._parse_header,
+         pipelines.fold_session_times, image)))
+    script = (
+        "import json, pickle, sys\n"
+        "holt, header, fold, image = pickle.load(open(sys.argv[1], 'rb'))\n"
+        "level, trend = holt([1.0, 2.0, 4.0, 3.0], 0.5, 0.25)\n"
+        "assert 'coinbase_data_pipeline_spark' not in sys.modules\n"
+        "print(json.dumps([level.tolist(), trend.tolist(), header(image),\n"
+        "                  fold([5, 1, 90], (0, 2, 2), 10)]))\n")
+    run = subprocess.run([sys.executable, "-I", "-c", script, str(payload)],
+                         cwd=tmp_path, capture_output=True, text=True,
+                         timeout=300)
+    assert run.returncode == 0, run.stderr
+    level, trend = indicators._holt_lane([1.0, 2.0, 4.0, 3.0], 0.5, 0.25)
+    closed, state = pipelines.fold_session_times([5, 1, 90], (0, 2, 2), 10)
+    assert json.loads(run.stdout) == [
+        level.tolist(), trend.tolist(), multimodal._parse_header(image),
+        [[list(c) for c in closed], list(state)]]
