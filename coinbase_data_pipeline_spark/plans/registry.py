@@ -60,8 +60,12 @@ for _part in _QUERY_PARTS:
 #
 # ROUND-14 WINDOW: (a) none — every oracle-paired query has a driver
 # row;
-# (b) four changes this round. Newest first: the feature builders in
-# operators/indicators.py are SQL text applied with selectExpr
+# (b) five changes this round. Newest first: sinks/tables.merge_upsert
+# is partition-scoped (it runs the incoming frame once, rewrites only
+# the touched product partitions and hard-links the rest), and its
+# publish rolls back an interrupted directory swap. streaming_upsert
+# runs it through run_file_upsert_pipeline, so it leads. Second, the
+# feature builders in operators/indicators.py are SQL text applied with selectExpr
 # (enhance_features is two projections), and time_range_fetch applies
 # its bounds as one conjunctive filter. The queries that run those
 # builders lead: log_returns, price_features, volume_features, rsi,
@@ -69,20 +73,20 @@ for _part in _QUERY_PARTS:
 # grouped_scale_full, returns_correlation, return_moments, acf,
 # seasonality_profile and time_range_fetch. Their outputs hash
 # identically to the parent's (count + xxhash64 of every column).
-# Second, the non-seasonal Holt recursion is written once
+# Third, the non-seasonal Holt recursion is written once
 # (indicators._holt_lane), and both Holt sweeps score through one
 # per-key pass (forecast._holt_sweep) that smooths each series once
 # for all folds; the fold fractions are defined once
 # (forecast.HOLT_CV_FOLDS). holt_param_sweep, holt_cv_sweep and
 # holt_winters run that code, and walk_forward_splits reads the
-# moved fold constant, so these four come next. Third, the
+# moved fold constant, so these four come next. Fourth, the
 # banded-LSH candidate stage now has one implementation in
 # operators/dedup.py (`_band`, `_self_candidates`, the shared MinHash
 # base/band/verify) and the unused masked-recall mode is gone; every
 # query that runs an LSH operator comes next. Their physical plans
 # are identical to the parent's with expression ids normalized,
 # except that simhash's bucket key is now named `bsig` (was `bval`).
-# Fourth, the join-strategy policy moved into the session config
+# Fifth, the join-strategy policy moved into the session config
 # (static broadcast threshold 10 MB, AQE's 64 MB), replacing q9's
 # orders demotion and the dedup operators' measured-text-bytes hint:
 # q9_product_profit, dedup_ngram_jaccard and dedup_containment ran
@@ -92,8 +96,8 @@ for _part in _QUERY_PARTS:
 # (c) the 13 r09 leftovers (age 5 this round, the bound's worst
 # case; service_health is already in (b)), then the r10 rows
 # alphabetically as far as the window reaches. The r10 rows pushed
-# past the first 50 by the feature, Holt and LSH queries are
-# approx_quantiles_hist, bloom_semi_join, boilerplate_ngrams,
+# past the first 50 by the sink, feature, Holt and LSH queries are
+# ann_pq, approx_quantiles_hist, bloom_semi_join, boilerplate_ngrams,
 # cluster_quality_profile, cross_sectional_rank, curriculum_augment,
 # dedup_spans, dedup_tfidf_cosine, gopher_quality, heavy_hitters_cms,
 # hopping_volume, keltner_channel, kmv_distinct_users,
@@ -102,6 +106,8 @@ for _part in _QUERY_PARTS:
 # q19_discounted_revenue, q7_volume_shipping, quality_classifier,
 # quality_classifier_scores and quantile_transform.
 _CHECK_FIRST = [
+    # (b) round-14-changed code paths: the partition-scoped merge sink
+    "streaming_upsert",
     # (b) round-14-changed code paths: the SQL-text feature builders
     "log_returns", "price_features", "volume_features", "rsi", "atr",
     "obv", "volatility", "momentum", "time_features", "grouped_scale",
@@ -122,7 +128,7 @@ _CHECK_FIRST = [
     "retention_cohorts", "rolling_correlation", "sessionize",
     "stochastic", "stratified_sample", "tfidf_top_terms",
     "validate_input", "value_histogram", "volume_rollup",
-    # r10 rows (alphabetically; the first 3 make the first 50)
+    # r10 rows (alphabetically; the first 2 make the first 50)
     "ann_ivf", "ann_ivfpq", "ann_pq", "approx_quantiles_hist",
     "bloom_semi_join", "boilerplate_ngrams", "cluster_quality_profile",
     "cross_sectional_rank", "curriculum_augment", "dedup_spans",

@@ -44,25 +44,24 @@ def compact_partition(spark, base_path: str, *, data_type: str,
     Streaming appends produce a file per micro-batch per partition; at
     scale the archive needs periodic compaction or scan planning
     drowns in file listings. Local implementation stages the rewrite
-    and swaps directories; returns the new file count. (On a
-    transactional table format this is OPTIMIZE/rewrite_data_files.)
+    and publishes it with the table store's directory swap
+    (sinks/tables._publish, whose crash states sinks/tables.recover
+    undoes first); returns the new file count. (On a transactional
+    table format this is OPTIMIZE/rewrite_data_files.)
     """
     import os
-    import shutil
     import uuid
+
+    from .tables import _publish, recover
 
     part_dir = os.path.join(base_path, f"data_type={data_type}",
                             f"product_id={product_id}")
+    recover(part_dir)
     df = spark.read.format(fmt).load(part_dir)
-    staging = f"{part_dir}.compact-{uuid.uuid4().hex[:8]}"
+    staging = f"{part_dir}.staging-{uuid.uuid4().hex[:8]}"
     df.coalesce(target_files).write.format(fmt).mode("overwrite") \
         .save(staging)
-    # destructive step LAST: a crash mid-swap leaves the old data in
-    # the trash dir (recoverable) instead of losing the partition
-    trash = f"{part_dir}.trash-{uuid.uuid4().hex[:8]}"
-    os.rename(part_dir, trash)
-    os.rename(staging, part_dir)
-    shutil.rmtree(trash)
+    _publish(staging, part_dir)
     return len([f for f in os.listdir(part_dir)
                 if not f.startswith(("_", "."))])
 

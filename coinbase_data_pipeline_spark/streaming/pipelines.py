@@ -563,21 +563,30 @@ def candle_upsert_batch_writer(store_root: str, *,
     each applied batch id leaves a marker (the standard foreachBatch
     commit-log pattern; a transactional store would use
     `txnAppId`/`txnVersion`): a re-delivered id is a no-op. The marker
-    is written INSIDE the staging directory and published by the SAME
-    rename that publishes the merged data (merge_upsert commit_marks),
-    so marker and merge are atomic — there is no crash window where
-    the store contains a batch's ticks but not its marker (or vice
-    versa), which a post-swap marker write would leave open to a
-    double merge. Pytest:
-    tests/test_streaming_sinks.py::test_upsert_writer_idempotent.
+    is written INSIDE the staging directory and published with the
+    merged data (merge_upsert commit_marks), so the store never holds
+    a batch's ticks without its marker or the reverse, which a
+    post-swap marker write would leave open to a double merge.
+
+    The publish is two renames (sinks/tables._publish): table →
+    ``candles.trash-*``, then staging → table. A crash between them
+    leaves no table; a writer that went on from there would find no
+    store, write only its own batch's candles and lose the history
+    with every marker. So each batch first runs sinks/tables.recover:
+    it renames the trash back (the interrupted batch has no marker, so
+    its re-delivery applies it) and removes stale staging and trash
+    dirs. Pytest:
+    tests/test_streaming_sinks.py::test_upsert_writer_idempotent and
+    ::test_upsert_writer_recovers_interrupted_publish.
     """
     import os
 
     from ..operators.candles import candle_merge_partials, candle_state
-    from ..sinks.tables import merge_upsert, read_table
+    from ..sinks.tables import merge_upsert, read_table, recover
     table_path = os.path.join(store_root, "candles")
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        recover(table_path)
         marker = os.path.join(table_path, "_applied", str(batch_id))
         if os.path.exists(marker):
             return
@@ -585,11 +594,10 @@ def candle_upsert_batch_writer(store_root: str, *,
         delta = candle_state(batch, volume=volume, freq=freq)
         stored = None
         if os.path.exists(table_path):
-            # the store is scanned by both the merge input and the
-            # upsert's kept-rows side; both scans execute inside the
-            # staging-write job, strictly before the directory swap,
-            # so a plain (lazy, page-cached) re-read is safe and the
-            # old eager localCheckpoint was a full extra job per cycle
+            # the store is scanned by the merge input (materialized
+            # once inside merge_upsert) and by the upsert's kept-rows
+            # side (the staging write); both run strictly before the
+            # directory swap, so a plain lazy read is safe here
             stored = read_table(spark, store_root, "candles")
             state = stored.withColumnRenamed("start_time", "bucket_start")
             replacement = candle_merge_partials(

@@ -172,6 +172,95 @@ def test_merge_upsert_last_write_wins(spark, tmp_path):
                    ("ETH-USD", "2024-01-01 00:00:00"): 10.0}
 
 
+PRICES = "product_id string, time string, price double"
+
+
+def _digest(df):
+    """(count, bit_xor(xxhash64(*))) over the columns in name order."""
+    return tuple(df.select(*sorted(df.columns)).agg(
+        F.count(F.lit(1)), F.expr("bit_xor(xxhash64(*))")).first())
+
+
+def _whole_table_merge(stored, df, keys, unique_keys):
+    """The merge over the whole stored table, without partition
+    scoping: the reference the scoped merge must equal."""
+    from pyspark.sql import Window
+
+    if unique_keys:
+        return (stored.join(df.select(*keys).distinct(), keys, "left_anti")
+                .unionByName(df))
+    w = Window.partitionBy(*keys).orderBy(F.col("_pri").desc())
+    return (stored.withColumn("_pri", F.lit(0))
+            .unionByName(df.withColumn("_pri", F.lit(1)))
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn", "_pri"))
+
+
+@pytest.mark.parametrize("unique_keys", [True, False])
+def test_scoped_merge_equals_whole_table_merge(spark, tmp_path,
+                                               unique_keys):
+    """The partition-scoped merge equals a merge over the whole table,
+    by count and xxhash, for a multi-product batch, an empty batch, a
+    batch with a null product_id (whose stored null-partition rows must
+    survive) and a re-delivered batch id; and a merge leaves Spark's
+    persistent-RDD count where it found it."""
+    from coinbase_data_pipeline_spark.sinks.tables import (
+        merge_upsert, read_table)
+
+    root = str(tmp_path / "store")
+    merge_upsert(spark, spark.createDataFrame(
+        [(f"P{p}", f"2024-01-01 00:0{t}:00", float(10 * p + t))
+         for p in range(3) for t in range(4)]
+        + [(None, "2024-01-01 00:00:00", -1.0)], PRICES), root, "prices")
+    multi = [("P0", "2024-01-01 00:01:00", 100.0),   # overwrite
+             ("P0", "2024-01-01 00:09:00", 101.0),   # new key
+             ("P3", "2024-01-01 00:00:00", 300.0)]   # new partition
+    batches = [(multi, "0"), ([], "1"),
+               ([(None, "2024-01-01 00:05:00", -2.0),
+                 ("P2", "2024-01-01 00:00:00", 200.0)], "2"),
+               (multi, "0")]
+    jsc = spark.sparkContext._jsc
+    for rows, batch_id in batches:
+        df = spark.createDataFrame(rows, PRICES)
+        want = _digest(_whole_table_merge(
+            read_table(spark, root, "prices"), df,
+            ["product_id", "time"], unique_keys))
+        persistent = jsc.getPersistentRDDs().size()
+        merge_upsert(spark, df, root, "prices", commit_marks=[batch_id],
+                     unique_keys=unique_keys)
+        assert jsc.getPersistentRDDs().size() == persistent
+        assert _digest(read_table(spark, root, "prices")) == want
+    assert sorted(os.listdir(os.path.join(root, "prices", "_applied"))) \
+        == ["0", "1", "2"]
+
+
+def test_scoped_merge_links_untouched_partitions(spark, tmp_path):
+    """A merge rewrites the partitions it touches and hard-links every
+    other partition's files (inodes kept) into the published table."""
+    from coinbase_data_pipeline_spark.sinks.tables import merge_upsert
+
+    root = str(tmp_path / "store")
+    merge_upsert(spark, spark.createDataFrame(
+        [(f"P{p}", "2024-01-01 00:00:00", float(p)) for p in range(3)],
+        PRICES), root, "prices")
+    table = os.path.join(root, "prices")
+
+    def inodes(part):
+        d = os.path.join(table, f"product_id={part}")
+        return {f: os.stat(os.path.join(d, f)).st_ino
+                for f in os.listdir(d)}
+
+    before = {p: inodes(f"P{p}") for p in range(3)}
+    merge_upsert(spark, spark.createDataFrame(
+        [("P1", "2024-01-01 00:00:00", 9.0)], PRICES), root, "prices",
+        unique_keys=True)
+    after = {p: inodes(f"P{p}") for p in range(3)}
+    assert after[0] == before[0] and after[2] == before[2]
+    assert any(f.endswith(".crc") for f in after[0])
+    assert not set(after[1].values()) & set(before[1].values())
+    assert not [n for n in os.listdir(root) if n != "prices"]
+
+
 def test_write_table_rejects_unknown(spark, tmp_path):
     from coinbase_data_pipeline_spark.sinks.tables import write_table
 
@@ -963,6 +1052,59 @@ def test_upsert_markers_commit_atomically_with_data(spark, tmp_path):
     # and a fresh start re-applies cleanly (no stale marker veto)
     w(b0, 0)
     assert os.path.exists(os.path.join(table, "_applied", "0"))
+
+
+def test_upsert_writer_recovers_interrupted_publish(spark, tmp_path):
+    """A crash between the publish's two renames leaves the table under
+    a trash name and a staging dir beside it. The next batch must roll
+    the trash back, drop the leftovers and merge into the full history,
+    so the store equals the batch recompute (candle_resample) over
+    every tick, instead of holding only that batch's candles."""
+    import shutil
+
+    from coinbase_data_pipeline_spark.operators.candles import (
+        candle_resample)
+    from coinbase_data_pipeline_spark.plans.catalog import ticks
+    from coinbase_data_pipeline_spark.sinks.tables import read_table
+    from coinbase_data_pipeline_spark.streaming.pipelines import (
+        candle_upsert_batch_writer)
+
+    t = (ticks(spark, SF).select("product_id", "time", "price",
+                                 "volume", "event_id").limit(1000).cache())
+    # interleaved batches: batch 1 lands in buckets batch 0 wrote
+    b0, b1 = (t.filter(F.col("event_id") % 2 == i).drop("event_id")
+              for i in (0, 1))
+    root = str(tmp_path / "store")
+    table = os.path.join(root, "candles")
+    w = candle_upsert_batch_writer(root, volume="volume")
+    w(b0, 0)
+    # batch 1 crashed between the renames: table → trash, staging left
+    os.rename(table, f"{table}.trash-0000aaaa")
+    os.makedirs(f"{table}.staging-0000bbbb/product_id=X")
+    w(b1, 1)
+
+    cols = ["product_id", "bucket_start", "open", "high", "low", "close",
+            "n_ticks", "volume"]
+
+    def rows(df):
+        return {(r.product_id, r.bucket_start): (
+            round(r.open, 6), round(r.high, 6), round(r.low, 6),
+            round(r.close, 6), r.n_ticks, round(r.volume, 6))
+            for r in df.select(*cols).collect()}
+
+    def stored():
+        return rows(read_table(spark, root, "candles")
+                    .withColumnRenamed("start_time", "bucket_start"))
+
+    want = rows(candle_resample(t.drop("event_id"), volume="volume"))
+    assert stored() == want
+    assert os.listdir(root) == ["candles"]
+    assert sorted(os.listdir(os.path.join(table, "_applied"))) == ["0", "1"]
+    # a crash after both renames leaves a stale trash beside the table
+    shutil.copytree(table, f"{table}.trash-0000cccc")
+    w(b1, 1)
+    assert os.listdir(root) == ["candles"]
+    assert stored() == want
 
 
 def test_sessionize_replay_four_buckets(spark):
